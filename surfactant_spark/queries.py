@@ -31,12 +31,17 @@ from .operators.dedup import (
     dedup_normalized,
     dedup_simhash,
 )
-from .operators.incremental import EVIDENCE_CAP
+from .operators.incremental import (
+    EVIDENCE_CAP,
+    TOKEN_PAT,
+    edges_surface,
+    kg_state_build,
+    kg_state_fold,
+    prepare_base,
+)
 from .operators.multimodal import documents_as_media, extract_media_features
 from .operators.similarity import topk_bruteforce, topk_ivf, topk_lsh
 from .operators.textops import analyze_documents
-
-TOKEN_PAT = r"[a-z][a-z0-9_.\-]{3,}"
 
 _D = "decimal(18,2)"
 
@@ -59,13 +64,7 @@ def _kg_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scheduling overhead triples the warm query (1.7 -> 3-5 s). The
     # spread belongs where per-row work is heavy (shingling, pair
     # joins, cosine scans), not on a cheap projection.
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.concat("source", F.lit("/"), F.col("doc_id").cast("string")).alias("url"),
-        F.sha2(F.col("text"), 256).alias("sha"),
-        F.regexp_extract_all(F.lower("text"), F.lit(TOKEN_PAT), 0).alias("toks"),
-    )
+    return prepare_base(_read(spark, sf_dir, "documents"))
 
 
 def q_kg_edges(
@@ -74,68 +73,12 @@ def q_kg_edges(
     """documents -> Uses edges: each doc *exports* its top token (the
     analogue of a library's soname), *mentions* every distinct token;
     mention links to the min-canonical-id exporter (J4 broadcast-join
-    pattern, single deterministic supplier per symbol).
-
-    ``base`` feeds four consumers (canon, counts, exporters, mentions);
-    localCheckpoint materializes the regex token extraction once
-    instead of four times (6.4 -> 1.7 s at sf0.1). At 100 TB the same
-    role is played by the pipeline's parquet stage snapshot.
-
-    Evidence is BOUNDED: ``n_evidence`` is the exact distinct-url count
-    (max dense_rank over a spillable sort window), ``sources`` keeps
-    only the ``evidence_cap`` lexicographically-first urls — a hot edge
-    can never blow up one aggregation buffer or output row."""
-    base = _kg_base(spark, sf_dir).localCheckpoint(eager=True)
-    canon = base.groupBy("sha").agg(F.min("doc_id").alias("canonical_id"))
-    base2 = base.join(canon, "sha")
-
-    tok_counts = (
-        base.select("doc_id", F.explode("toks").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    # min_by over (-cnt, tok) == "order by cnt desc, tok asc, pick 1"
-    # as an AGGREGATION: partial aggs combine map-side and no per-doc
-    # sort runs — unlike a row_number window (measured ~30% faster here
-    # and the scalable shape at 10^12 docs)
-    top = tok_counts.groupBy("doc_id").agg(
-        F.min_by("tok", F.struct((-F.col("cnt")).alias("nc"), F.col("tok"))).alias(
-            "top_token"
-        )
-    )
-    exporters = (
-        top.join(base2.select("doc_id", "canonical_id"), "doc_id")
-        .groupBy(F.col("top_token").alias("tok"))
-        .agg(F.min("canonical_id").alias("obj_id"))
-    )
-    mentions = base2.select(
-        F.col("canonical_id").alias("subj_id"),
-        "url",
-        F.explode(F.array_distinct("toks")).alias("tok"),
-    )
-    # dense_rank shares one shuffle with the aligned groupBy; the same
-    # url reached via two tokens shares one rank, so max(dr) is the
-    # exact distinct count while the collect_set buffer holds <= cap
-    w = Window.partitionBy("subj_id", "obj_id").orderBy("url")
-    return (
-        mentions.join(F.broadcast(exporters), "tok")
-        .where(F.col("subj_id") != F.col("obj_id"))
-        .select("subj_id", "obj_id", "url")
-        .withColumn("dr", F.dense_rank().over(w))
-        .groupBy("subj_id", "obj_id")
-        .agg(
-            F.max("dr").cast("long").alias("n_evidence"),
-            # joined string, not array: the driver canonicalizer sorts
-            # result columns with pandas and arrays are unhashable there
-            F.array_join(
-                F.array_sort(
-                    F.collect_set(F.when(F.col("dr") <= evidence_cap, F.col("url")))
-                ),
-                "|",
-            ).alias("sources"),
-        )
-        .select("subj_id", F.lit("Uses").alias("pred"), "obj_id", "n_evidence", "sources")
-    )
+    pattern, single deterministic supplier per symbol). The one KG
+    computation, ``operators.incremental.kg_state_build``, in the
+    driver-hashable ``edges_surface`` shape; evidence is bounded by
+    ``evidence_cap`` with an exact ``n_evidence``."""
+    docs = _read(spark, sf_dir, "documents")
+    return edges_surface(kg_state_build(docs, evidence_cap=evidence_cap))
 
 
 SQL_KG_BASE = f"""
@@ -2664,20 +2607,14 @@ def q_kg_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only crawl batch, surface the folded edges. The oracle is
     the UNSPLIT kg_edges SQL — identity with the full rebuild IS the
     correctness claim of incremental view maintenance."""
-    from .operators.incremental import (
-        edges_surface,
-        kg_state_build,
-        kg_state_fold,
-    )
-
     docs = _read(spark, sf_dir, "documents")
     # corpus-derived midpoint (doc_ids are dense, so ~half the docs land
     # in the delta at every sf): one parquet-stats-only min/max scan, no
     # corpus action. Any id split preserves the append-only order.
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     split = (int(lo) + int(hi) + 1) // 2
-    state = kg_state_build(docs.where(F.col("doc_id") < split), TOKEN_PAT)
-    state = kg_state_fold(state, docs.where(F.col("doc_id") >= split), TOKEN_PAT)
+    state = kg_state_build(docs.where(F.col("doc_id") < split))
+    state = kg_state_fold(state, docs.where(F.col("doc_id") >= split))
     return edges_surface(state)
 
 
@@ -2689,15 +2626,11 @@ def q_kg_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     run it between a fold and a rebuild, or between two crawls, and
     alert on the drift profile. One full-outer equi join on the edge
     key — nothing driver-side, AQE-skew-safe."""
-    from .operators.incremental import (
-        edges_surface,
-        kg_state_build,
-        snapshot_diff,
-    )
+    from .operators.incremental import snapshot_diff
 
     docs = _read(spark, sf_dir, "documents")
-    old = edges_surface(kg_state_build(docs.where(F.col("doc_id") % 2 == 0), TOKEN_PAT))
-    new = edges_surface(kg_state_build(docs.where(F.col("doc_id") % 2 == 1), TOKEN_PAT))
+    old = edges_surface(kg_state_build(docs.where(F.col("doc_id") % 2 == 0)))
+    new = edges_surface(kg_state_build(docs.where(F.col("doc_id") % 2 == 1)))
     return snapshot_diff(
         old, new, ("subj_id", "pred", "obj_id"), ("n_evidence", "sources")
     )
@@ -6244,7 +6177,7 @@ wins AS (
   FROM ex, UNNEST(range(greatest(pos - {w} + 1, 1),
                         least(pos, g_cnt - {w} + 1) + 1)) AS s(s)),
 m1 AS (SELECT doc_id, s, MIN(h) AS fp_hash FROM wins GROUP BY doc_id, s),
--- rightmost minimal hash (robust winnowing's explicit tie-break)
+-- rightmost minimal hash (standard winnowing's explicit tie-break)
 sel AS (SELECT m1.doc_id, m1.s, m1.fp_hash, MAX(w2.pos) AS pos
         FROM m1 JOIN wins w2
           ON m1.doc_id = w2.doc_id AND m1.s = w2.s AND w2.h = m1.fp_hash

@@ -13,6 +13,25 @@ import os
 from pyspark.sql import SparkSession
 
 
+# heap ceiling: the default never asks for more than this, however
+# large the host
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap that fits the host: half of ``MemTotal``, capped at
+    ``MAX_DRIVER_MEM_MB`` (the cap alone when ``meminfo`` is unreadable).
+    Local mode runs every executor thread inside this one JVM, and its
+    RSS grows well past the heap, so a fixed 48g OOM-kills it on a
+    16 GB host."""
+    try:
+        with open(meminfo, encoding="ascii") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{min(kb // 2048, MAX_DRIVER_MEM_MB)}m"
+
+
 def get_spark(
     app_name: str = "surfactant_spark",
     master: str | None = None,
@@ -49,7 +68,10 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
         # this sandbox VM has lazily host-backed memory: first touch of
         # a new page costs 1-9 s/GB (host-side fault). A fixed,
         # pre-touched heap (set e.g. "-Xms24g -XX:+AlwaysPreTouch" via

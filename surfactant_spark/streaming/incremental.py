@@ -10,9 +10,14 @@ periodic batch job — there is no streaming CC (SURVEY.md §2.10).
 
 from __future__ import annotations
 
+import os
+import time
+from typing import Dict, Optional
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import extract_pages
+from ..plans import commit
 from ..schema import PAGES
 
 
@@ -117,40 +122,77 @@ _DOCS_SCHEMA = "doc_id long, source string, text string"
 _COMPACT_TABLES = ("canon", "exporters", "edges")
 
 
-def _state_version_dirs(state_dir: str):
-    import os
-    import re
+def _fold_stream(stream: DataFrame, state_dir: str, checkpoint: str, step,
+                 retain: int, after_commit=None) -> Optional[int]:
+    """Run ``stream`` availableNow to completion, folding each
+    micro-batch into versioned state under ``state_dir``; -> the latest
+    committed version (None when none ever committed).
 
-    if not os.path.isdir(state_dir):
-        return {}
-    out = {}
-    for name in os.listdir(state_dir):
-        m = re.fullmatch(r"v(\d+)", name)
-        if m and os.path.exists(os.path.join(state_dir, name, "_OK")):
-            out[int(m.group(1))] = os.path.join(state_dir, name)
-    return out
+    ``step(batch_df, batch_id, prev, write)`` is the fold itself: it
+    reads committed version ``prev`` (None for the first batch), writes
+    its tables with ``write(path_under_state_dir, df) -> rows`` and
+    returns the batch's metrics columns (name -> int). Everything else
+    lives here, once:
+
+    - replay guard: a replayed batch whose version ``v{b}`` is committed
+      only finishes the housekeeping a crash may have cut short;
+    - frontier guard: a batch id below the committed frontier (a fresh
+      checkpoint replaying folded files) is already in the state;
+    - commit: every write of the batch removes ``v{b}/_OK`` first, the
+      metrics row ``metrics/d{b}`` lands before the marker goes on, so
+      a committed version always has its metrics row and a crash
+      anywhere before the marker replays the whole batch;
+    - retention: only the newest ``retain`` committed versions survive;
+    - ``after_commit(spark, batch_id)`` (e.g. mention compaction)."""
+
+    def versions() -> Dict[int, str]:
+        return commit.dirs(state_dir, "v", committed=True)
+
+    def housekeeping(s: SparkSession, batch_id: int) -> None:
+        if retain and retain > 0:
+            commit.drop_below(state_dir, "v", sorted(versions())[-retain:][0])
+        if after_commit is not None:
+            after_commit(s, batch_id)
+
+    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
+        s = batch_df.sparkSession
+        done = versions()
+        if batch_id in done:
+            housekeeping(s, batch_id)
+            return
+        if done and max(done) > batch_id:
+            return
+        t0 = time.time()
+        marker = os.path.join(state_dir, f"v{batch_id}", commit.MARKER)
+
+        def write(path: str, df: DataFrame) -> int:
+            return commit.write(df, os.path.join(state_dir, path), marker)
+
+        metrics = step(batch_df, batch_id, max(done) if done else None, write)
+        row = {"batch_id": batch_id, **metrics, "wall_ms": int((time.time() - t0) * 1000)}
+        write(f"metrics/d{batch_id}", s.createDataFrame(
+            [tuple(row.values())], ", ".join(f"{c} long" for c in row)))
+        commit.mark(marker, {"batch_id": batch_id})
+        housekeeping(s, batch_id)
+
+    q = (
+        stream.writeStream.foreachBatch(fold_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    done = versions()
+    return max(done) if done else None
 
 
 def _compact_frontier(state_dir: str, version: int) -> int:
     """Highest batch id covered by a committed mention compaction no
     newer than ``version`` (-1 when none): ``mentions/c{u}`` holds the
     union of deltas d0..d{u}, marker-committed like state versions."""
-    import os
-    import re
-
     mdir = os.path.join(state_dir, "mentions")
-    if not os.path.isdir(mdir):
-        return -1
-    upto = -1
-    for name in os.listdir(mdir):
-        m = re.fullmatch(r"c(\d+)", name)
-        if (
-            m
-            and int(m.group(1)) <= version
-            and os.path.exists(os.path.join(mdir, name, "_OK"))
-        ):
-            upto = max(upto, int(m.group(1)))
-    return upto
+    return max((u for u in commit.dirs(mdir, "c", committed=True) if u <= version),
+               default=-1)
 
 
 def _mention_paths(state_dir: str, version: int) -> list:
@@ -159,16 +201,10 @@ def _mention_paths(state_dir: str, version: int) -> list:
     it. Deltas AT OR BELOW the compaction frontier are ignored even if
     still on disk (an interrupted post-compaction cleanup leaves them
     behind; reading both would double-count)."""
-    import os
-
     lo = _compact_frontier(state_dir, version)
     paths = [os.path.join(state_dir, "mentions", f"c{lo}")] if lo >= 0 else []
-    paths += [
-        os.path.join(state_dir, "mentions", f"d{b}")
-        for b in range(lo + 1, version + 1)
-        if os.path.isdir(os.path.join(state_dir, "mentions", f"d{b}"))
-    ]
-    return paths
+    deltas = commit.dirs(os.path.join(state_dir, "mentions"), "d")
+    return paths + [deltas[b] for b in range(lo + 1, version + 1) if b in deltas]
 
 
 def _read_state(spark: SparkSession, state_dir: str, version: int):
@@ -177,8 +213,6 @@ def _read_state(spark: SparkSession, state_dir: str, version: int):
     the per-batch deltas past it (deltas are append-only and exempt from
     retention, so they are all present even when older compact versions
     were cleaned up)."""
-    import os
-
     from ..operators.incremental import KgState
 
     vdir = os.path.join(state_dir, f"v{version}")
@@ -188,65 +222,30 @@ def _read_state(spark: SparkSession, state_dir: str, version: int):
     )
 
 
-def _write_state(state, state_dir: str, batch_id: int) -> str:
-    """Write version ``batch_id``'s data WITHOUT its marker (the caller
-    marks after the metrics delta lands, so a marker always implies a
-    complete version INCLUDING its metrics row): a replayed batch
-    (driver died between the fold and the sink checkpoint advancing)
-    rewrites its own versioned directory and mention delta
-    deterministically; readers only trust marked versions, and a
-    partially-written delta is always overwritten by its own replay
-    before the marker can appear."""
-    import os
-
-    vdir = os.path.join(state_dir, f"v{batch_id}")
-    for t in _COMPACT_TABLES:
-        getattr(state, t).write.mode("overwrite").parquet(os.path.join(vdir, t))
-    state.mentions_delta.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "mentions", f"d{batch_id}")
-    )
-    return vdir
-
-
-def _mark_ok(dirpath: str) -> None:
-    import os
-
-    with open(os.path.join(dirpath, "_OK"), "w", encoding="utf-8") as f:
-        f.write("ok")
-
-
 def _compact_mentions(spark: SparkSession, state_dir: str, batch_id: int, keep: int) -> None:
     """Bound the mention-store read fan-in: fold each micro-batch's
     delta dir forever and ``_read_state`` unions one directory per batch
     — unbounded for a long-running stream. When more than ``keep``
     deltas have accumulated past the compaction frontier, rewrite all
     but the newest ``keep`` (plus the prior compaction) into ONE
-    parquet dir ``mentions/c{upto}``, marker-committed like state
-    versions, then drop what it covers. Crash-safe at every step: an
-    unmarked c-dir is ignored (and overwritten by the next attempt);
-    after the marker, leftover covered dirs are ignored by the
-    frontier-aware read path, so an interrupted cleanup never
-    double-counts. Mention rows are never lost — compaction moves
-    bytes, the append-only content is invariant (asserted in tests as
-    fold == full rebuild across compactions)."""
-    import os
-    import shutil
-
+    parquet dir ``mentions/c{upto}``, committed through the same
+    protocol as state versions, then drop what it covers. An unmarked
+    c-dir is ignored; covered dirs left by an interrupted cleanup are
+    ignored by the frontier-aware read path and dropped by the next
+    compaction. Mention rows are never lost — compaction moves bytes,
+    the append-only content is invariant (asserted in tests as fold ==
+    full rebuild across compactions)."""
+    mdir = os.path.join(state_dir, "mentions")
     lo = _compact_frontier(state_dir, batch_id)
-    live = [b for b in range(lo + 1, batch_id + 1)
-            if os.path.isdir(os.path.join(state_dir, "mentions", f"d{b}"))]
-    if len(live) <= keep:
+    if sum(lo < b <= batch_id for b in commit.dirs(mdir, "d")) <= keep:
         return
     upto = batch_id - keep
-    src = _mention_paths(state_dir, upto)
-    cdir = os.path.join(state_dir, "mentions", f"c{upto}")
-    spark.read.parquet(*src).write.mode("overwrite").parquet(cdir)
-    _mark_ok(cdir)
-    for p in src:  # now covered by c{upto}: marker first, then data
-        ok = os.path.join(p, "_OK")
-        if os.path.exists(ok):
-            os.remove(ok)
-        shutil.rmtree(p, ignore_errors=True)
+    cdir = os.path.join(mdir, f"c{upto}")
+    marker = os.path.join(cdir, commit.MARKER)
+    commit.write(spark.read.parquet(*_mention_paths(state_dir, upto)), cdir, marker)
+    commit.mark(marker, {"upto": upto})
+    commit.drop_below(mdir, "c", upto)
+    commit.drop_below(mdir, "d", upto + 1)
 
 
 def stream_kg_fold(
@@ -264,121 +263,64 @@ def stream_kg_fold(
     the graph stays current without ever recomputing old batches — the
     streaming twin of the kg_incremental query.
 
-    Exactly-once state: the Structured Streaming checkpoint replays an
-    interrupted batch with the SAME batch_id; the fold writes its state
-    snapshot to ``state_dir/v{batch_id}`` and marks it atomically, so a
-    replay either finds the marker (fully committed — no-op) or
-    overwrites its own partial output. State snapshots are parquet, so
-    each fold's lineage is one batch deep (the plans/pipeline.py
-    stage-snapshot pattern; an Iceberg deployment swaps these for
-    table snapshots + MERGE INTO).
+    Exactly-once state, by one protocol (``plans.commit``): marker
+    off, write, atomic marker on; readers trust only markers. Batch
+    ``b`` writes its compact tables to ``state_dir/v{b}/``, its mention
+    delta to ``mentions/d{b}`` and its metrics row to ``metrics/d{b}``,
+    then commits them all with ``v{b}/_OK``. The Structured Streaming
+    checkpoint replays an interrupted batch with the SAME batch id,
+    which either finds its marker (committed: no-op) or deterministically
+    rewrites its own unmarked output. An Iceberg deployment swaps these
+    for table snapshots + MERGE INTO.
 
     Batches must be append-only with increasing doc_ids across batches
     (the operators/incremental.py precondition). Runs availableNow to
     completion; returns the latest committed KgState read back from
     disk (None when no batch has ever committed).
 
-    Store layout is write-cost-aware: compact tables (canon, exporters,
-    edges — dimension/aggregate-sized) rewrite per version, while the
-    corpus-sized mention rows append as per-batch deltas under
-    ``state_dir/mentions/d{batch_id}`` and are NEVER rewritten — a fold
-    costs O(delta) write I/O, not O(corpus) (the Iceberg-append
-    analogue; a bucketed-by-token layout would additionally let the
-    broadcast probe prune its read).
-
-    ``retain`` bounds the compact-version directories: after each
-    committed fold, only the newest ``retain`` versions survive (a
-    long-running stream otherwise accumulates one compact-state copy
-    per micro-batch). Mention deltas are exempt — they are the data,
-    not a copy. Folds only ever read the LATEST committed version, so
-    retention never breaks resume; markers are removed before data so
-    an interrupted cleanup leaves an ignored (unmarked) directory,
-    never a half-trusted one.
-
-    ``compact_keep`` bounds the mention-DELTA directories the same way:
-    once more than that many deltas accumulate past the last
-    compaction, everything older than the newest ``compact_keep`` is
-    rewritten into one marker-committed ``mentions/c{upto}`` dir and
-    the covered dirs dropped, so a long-running stream's read fan-in
-    stays at ``compact_keep + 1`` directories instead of one per
-    micro-batch ever folded (0 disables)."""
+    Mention deltas are corpus-sized and never rewritten, so a fold
+    costs O(delta) write I/O, not O(corpus) (a bucketed-by-token layout
+    would additionally let the broadcast probe prune its read). ``retain`` keeps the
+    newest committed compact versions (folds only read the latest, so
+    retention never breaks resume; deltas are exempt). ``compact_keep``
+    bounds the delta fan-in: past that many deltas, the older ones are
+    rewritten into one committed ``mentions/c{upto}`` dir and dropped,
+    so a read unions at most ``compact_keep + 1`` dirs (0 disables)."""
     from ..operators.incremental import kg_state_build, kg_state_fold
 
-    import os
-    import shutil
-
-    def fold_batch(batch_df, batch_id: int) -> None:
-        import time
-
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        if os.path.exists(os.path.join(vdir, "_OK")):
-            return  # replay of a committed fold
-        t0 = time.time()
-        s = batch_df.sparkSession
-        committed = _state_version_dirs(state_dir)
-        if committed and max(committed) >= batch_id:
-            # a replay from a FRESH checkpoint restarts batch ids below
-            # the committed frontier (retention may have pruned this
-            # id's marker): the data is already folded — recomputing
-            # would corrupt the metrics history (and pointlessly
-            # rebuild state). The checkpoint is the progress record;
-            # new files over a lost checkpoint need a fresh state_dir.
-            return
-        prior = [v for v in committed if v < batch_id]
-        if prior:
-            prev = _read_state(s, state_dir, max(prior))
-            _write_state(kg_state_fold(prev, batch_df), state_dir, batch_id)
+    def step(batch_df, b, prev, write):
+        if prev is None:
+            st = kg_state_build(batch_df)
         else:
-            _write_state(kg_state_build(batch_df), state_dir, batch_id)
-        # per-batch metrics row (the pipeline-lineage analogue for the
-        # fold store): its own idempotent delta dir, so a replayed batch
-        # overwrites rather than duplicates. Counts are batch-sized
-        # (the input) or parquet-stats-sized (the written aggregate).
-        # Written BEFORE the version marker: a crash in between replays
-        # the whole batch (marker absent), so a marked version always
-        # has its metrics row — the reverse order would early-return on
-        # the marker and lose the row forever.
-        n_docs = batch_df.count()
-        n_edges = s.read.parquet(os.path.join(vdir, "edges")).count()
-        s.createDataFrame(
-            [(batch_id, n_docs, n_edges, int((time.time() - t0) * 1000))],
-            "batch_id long, n_docs long, n_edges long, wall_ms long",
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "metrics", f"d{batch_id}")
-        )
-        _mark_ok(vdir)
-        if retain and retain > 0:
-            done = _state_version_dirs(state_dir)
-            for v in sorted(done)[:-retain]:
-                os.remove(os.path.join(done[v], "_OK"))
-                shutil.rmtree(done[v], ignore_errors=True)
+            st = kg_state_fold(_read_state(batch_df.sparkSession, state_dir, prev), batch_df)
+        for t in ("canon", "exporters"):
+            write(f"v{b}/{t}", getattr(st, t))
+        n_edges = write(f"v{b}/edges", st.edges)
+        write(f"mentions/d{b}", st.mentions_delta)
+        return {"n_docs": batch_df.count(), "n_edges": n_edges}
+
+    def compact(s, b):
         if compact_keep and compact_keep > 0:
-            _compact_mentions(s, state_dir, batch_id, compact_keep)
+            _compact_mentions(s, state_dir, b, compact_keep)
 
     stream = (
         spark.readStream.schema(_DOCS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(docs_path)
     )
-    q = (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    committed = _state_version_dirs(state_dir)
-    if not committed:
-        return None
-    return _read_state(spark, state_dir, max(committed))
+    v = _fold_stream(stream, state_dir, checkpoint, step, retain, compact)
+    return None if v is None else _read_state(spark, state_dir, v)
 
 
 def read_fold_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
-    """All per-batch fold metrics rows (batch_id, n_docs, n_edges,
-    wall_ms) — the run record of the streaming KG store."""
-    import os
-
-    return spark.read.parquet(os.path.join(state_dir, "metrics", "d*"))
+    """All committed per-batch fold metrics rows (batch_id, then the
+    fold's own columns, then wall_ms) — the run record of a fold store.
+    A row past the committed frontier belongs to a batch that has not
+    committed yet (it will be rewritten on replay) and is left out."""
+    done = commit.dirs(state_dir, "v", committed=True)
+    return spark.read.parquet(os.path.join(state_dir, "metrics", "d*")).where(
+        F.col("batch_id") <= max(done, default=-1)
+    )
 
 
 def stream_url_seen(
@@ -396,18 +338,11 @@ def stream_url_seen(
     Bloom filter (the count of already-seen urls is the re-crawl work a
     frontier would skip), then FOLDS them in via the word-wise bit_or
     semigroup (`operators.sketch.bloom_merge`) — the streaming twin of
-    q_url_bloom, and the state-layout twin of `stream_kg_fold` with one
+    q_url_bloom, on the same fold driver as `stream_kg_fold` with one
     simplification: the entire state IS compact (<= m_words rows), so
-    there is no delta/compaction tier — each version directory holds
-    the whole filter, versions are marker-committed with the
-    metrics-before-marker discipline, and ``retain`` bounds the copies.
-    Replay-idempotent: a replayed batch_id either finds its marker
-    (no-op) or deterministically rewrites its own version. Returns the
-    latest committed words DataFrame (None when no batch committed)."""
-    import os
-    import shutil
-    import time
-
+    each version ``v{b}/words`` holds the whole filter and there is no
+    delta/compaction tier. Returns the latest committed words DataFrame
+    (None when no batch committed)."""
     from ..operators.sketch import (
         BLOOM_K,
         BLOOM_M_WORDS,
@@ -438,61 +373,24 @@ def stream_url_seen(
         with open(geo_path, "w", encoding="utf-8") as fh:
             fh.write(geo)
 
-    def fold_batch(batch_df, batch_id: int) -> None:
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        if os.path.exists(os.path.join(vdir, "_OK")):
-            return
-        t0 = time.time()
-        s = batch_df.sparkSession
-        committed = _state_version_dirs(state_dir)
-        if committed and max(committed) >= batch_id:
-            return  # stale replay below the committed frontier (see kg fold)
+    def step(batch_df, b, prev, write):
         urls = batch_df.select("url").dropDuplicates().localCheckpoint(eager=True)
         n_urls = urls.count()
-        prior = [v for v in committed if v < batch_id]
-        if prior:
-            prev = s.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}", "words")
-            )
-            n_seen = (
-                bloom_probe(prev, urls, m_words=mw, k=kk)
-                .where(F.col("bloom_hit") == 1)
-                .count()
-            )
-            words = bloom_merge(prev, bloom_build(urls, m_words=mw, k=kk))
-        else:
-            n_seen = 0
-            words = bloom_build(urls, m_words=mw, k=kk)
-        words.write.mode("overwrite").parquet(os.path.join(vdir, "words"))
-        n_words = s.read.parquet(os.path.join(vdir, "words")).count()
-        # metrics BEFORE the marker (a marked version always has its row)
-        s.createDataFrame(
-            [(batch_id, n_urls, n_seen, n_words, int((time.time() - t0) * 1000))],
-            "batch_id long, n_urls long, n_seen long, n_words long, wall_ms long",
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "metrics", f"d{batch_id}")
-        )
-        _mark_ok(vdir)
-        if retain and retain > 0:
-            done = _state_version_dirs(state_dir)
-            for v in sorted(done)[:-retain]:
-                os.remove(os.path.join(done[v], "_OK"))
-                shutil.rmtree(done[v], ignore_errors=True)
+        words = bloom_build(urls, m_words=mw, k=kk)
+        n_seen = 0
+        if prev is not None:
+            old = batch_df.sparkSession.read.parquet(
+                os.path.join(state_dir, f"v{prev}", "words"))
+            n_seen = (bloom_probe(old, urls, m_words=mw, k=kk)
+                      .where(F.col("bloom_hit") == 1).count())
+            words = bloom_merge(old, words)
+        n_words = write(f"v{b}/words", words)
+        return {"n_urls": n_urls, "n_seen": n_seen, "n_words": n_words}
 
-    q = (
-        stream_pages(spark, pages_path, max_files_per_trigger)
-        .writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    committed = _state_version_dirs(state_dir)
-    if not committed:
-        return None
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v{max(committed)}", "words")
-    )
+    stream = stream_pages(spark, pages_path, max_files_per_trigger)
+    v = _fold_stream(stream, state_dir, checkpoint, step, retain)
+    return None if v is None else spark.read.parquet(
+        os.path.join(state_dir, f"v{v}", "words"))
 
 
 def stream_edge_recency(
@@ -512,27 +410,14 @@ def stream_edge_recency(
     fold == full rebuild EXACTLY (asserted by the tests against the
     batch operator on the unioned corpus; assumes each page-url arrives
     in one batch, the append-only crawl-snapshot contract the kg fold
-    already documents). State layout is the url_seen discipline: each
-    version dir holds the WHOLE (edge-dimension-sized) state, versions
-    are marker-committed with metrics-before-marker, replays
-    short-circuit on the marker, ``retain`` bounds kept versions.
-    Returns the latest committed state (None when nothing committed);
-    read staleness/active off it with `edge_recency_from_state`."""
-    import os
-    import shutil
-    import time
-
+    already documents). Same fold driver and layout as
+    `stream_url_seen`: each version ``v{b}/edges`` holds the WHOLE
+    (edge-dimension-sized) state. Returns the latest committed state
+    (None when nothing committed); read staleness/active off it with
+    `edge_recency_from_state`."""
     from ..operators.webgraph import _URL_HOST, extract_links
 
-    def fold_batch(batch_df, batch_id: int) -> None:
-        vdir = os.path.join(state_dir, f"v{batch_id}")
-        if os.path.exists(os.path.join(vdir, "_OK")):
-            return
-        t0 = time.time()
-        s = batch_df.sparkSession
-        committed = _state_version_dirs(state_dir)
-        if committed and max(committed) >= batch_id:
-            return
+    def step(batch_df, b, prev, write):
         ts = batch_df.select("url", F.col("warc_ts").cast("long").alias("_ep"))
         cur = (
             extract_links(batch_df)
@@ -553,13 +438,12 @@ def stream_edge_recency(
             .localCheckpoint(eager=True)
         )
         n_batch = cur.count()
-        prior = [v for v in committed if v < batch_id]
-        if prior:
-            prev = s.read.parquet(
-                os.path.join(state_dir, f"v{max(prior)}", "edges")
-            )
+        merged, n_prev = cur, 0
+        if prev is not None:
+            old = batch_df.sparkSession.read.parquet(
+                os.path.join(state_dir, f"v{prev}", "edges"))
             merged = (
-                prev.unionByName(cur)
+                old.unionByName(cur)
                 .groupBy("src_host", "ent")
                 .agg(
                     F.sum("n_sightings").cast("long").alias("n_sightings"),
@@ -567,48 +451,15 @@ def stream_edge_recency(
                     F.max("last_seen").cast("long").alias("last_seen"),
                 )
             )
-            n_prev = prev.count()
-        else:
-            merged = cur
-            n_prev = 0
-        merged.write.mode("overwrite").parquet(os.path.join(vdir, "edges"))
-        n_total = s.read.parquet(os.path.join(vdir, "edges")).count()
-        s.createDataFrame(
-            [
-                (
-                    batch_id,
-                    n_batch,
-                    n_total,
-                    n_total - n_prev,
-                    int((time.time() - t0) * 1000),
-                )
-            ],
-            "batch_id long, n_batch_edges long, n_total_edges long,"
-            " n_new_edges long, wall_ms long",
-        ).write.mode("overwrite").parquet(
-            os.path.join(state_dir, "metrics", f"d{batch_id}")
-        )
-        _mark_ok(vdir)
-        if retain and retain > 0:
-            done = _state_version_dirs(state_dir)
-            for v in sorted(done)[:-retain]:
-                os.remove(os.path.join(done[v], "_OK"))
-                shutil.rmtree(done[v], ignore_errors=True)
+            n_prev = old.count()
+        n_total = write(f"v{b}/edges", merged)
+        return {"n_batch_edges": n_batch, "n_total_edges": n_total,
+                "n_new_edges": n_total - n_prev}
 
-    q = (
-        stream_pages(spark, pages_path, max_files_per_trigger)
-        .writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    committed = _state_version_dirs(state_dir)
-    if not committed:
-        return None
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v{max(committed)}", "edges")
-    )
+    stream = stream_pages(spark, pages_path, max_files_per_trigger)
+    v = _fold_stream(stream, state_dir, checkpoint, step, retain)
+    return None if v is None else spark.read.parquet(
+        os.path.join(state_dir, f"v{v}", "edges"))
 
 
 def edge_recency_from_state(state: "DataFrame", horizon_s: int = 120):

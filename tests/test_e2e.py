@@ -139,6 +139,67 @@ def test_pipeline_resume_skips_completed_stages(spark, spark_pages, spark_alias,
     assert third.edges.count() == n_edges
 
 
+def test_pipeline_crash_mid_rewrite_reruns_stage(
+    spark, spark_pages, spark_alias, corpus, tmp_path, monkeypatch
+):
+    """A resume=False rerun that dies while rewriting ``edges`` (a
+    raising UDF fails the write task) must leave ``edges`` uncommitted:
+    the next resume re-runs it and its triples equal the oracle. The old
+    marker stood over the half-rewritten directory, and the resume
+    served 0 edges while stage_rows still claimed the old count. A torn
+    ``_edges_OK`` and a leftover marker temp file are "not committed"
+    too, never a JSON decode error."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    import surfactant_spark.plans.pipeline as pipeline
+
+    pages_pdf, alias_pdf = corpus
+    _, _, want = run_oracle(pages_pdf, alias_pdf)
+    wd = str(tmp_path / "wd_crash")
+    marker = os.path.join(wd, "_edges_OK")
+
+    def triples(res):
+        return {(r.subj_uuid, r.pred, r.obj_uuid) for r in res.edges.collect()}
+
+    full = run_pipeline(spark, spark_pages, spark_alias, wd)
+    assert triples(full) == want
+
+    real_link = pipeline.link_extracted
+
+    def dying_link(*args, **kwargs):
+        def boom(pred):
+            raise RuntimeError("injected edges write failure")
+
+        # nondeterministic: the filter stays in the write's final stage,
+        # after the overwrite has cleared the old snapshot
+        udf = F.udf(boom, "boolean").asNondeterministic()
+        return real_link(*args, **kwargs).where(udf("pred"))
+
+    monkeypatch.setattr(pipeline, "link_extracted", dying_link)
+    with pytest.raises(Exception, match="injected edges write failure"):
+        run_pipeline(spark, spark_pages, spark_alias, wd, resume=False)
+    monkeypatch.undo()
+
+    res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
+    assert triples(res) == want
+    assert "edges" in res.stages_run and "edges" not in res.stages_resumed
+    assert res.stage_rows["edges"] == len(res.edges.collect())
+
+    with open(marker, encoding="utf-8") as f:
+        body = f.read()
+    with open(marker, "w", encoding="utf-8") as f:
+        f.write(body[: len(body) // 2])  # torn marker
+    res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
+    assert res.stages_run == ["edges"] and triples(res) == want
+
+    os.remove(marker)
+    with open(marker + ".tmp", "w", encoding="utf-8") as f:
+        f.write(body)  # died between the temp write and the rename
+    res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
+    assert res.stages_run == ["edges"] and triples(res) == want
+
+
 def test_duplicate_pages_share_canonical_node(spark, spark_pages, corpus):
     """Byte-identical pages under different urls collapse; edges from a
     duplicate url attribute to the canonical node (content identity,

@@ -5,6 +5,7 @@ folds only new files; replayed batches are idempotent via the marker.
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from surfactant_spark.operators.incremental import edges_surface, kg_state_build
@@ -207,45 +208,113 @@ def test_compaction_read_ignores_covered_leftovers(spark, tmp_path):
     assert _edge_set(edges_surface(st2)) == clean  # d0 ignored, no double-count
 
 
-def test_marker_implies_metrics(spark, tmp_path, monkeypatch):
-    """Crash injection between the metrics write and the version
-    marker: the batch replays wholesale (marker absent -> no
-    early-return), the metrics delta is overwritten rather than
-    duplicated, and a marked version therefore ALWAYS has its metrics
-    row — the old order (marker first) lost the row forever."""
-    import pyspark.errors
+CRASH_POINTS = (
+    "delta_write", "metrics_row", "marker", "retention", "compaction",
+    "compaction_cleanup",
+)
 
+
+@pytest.mark.parametrize("point", CRASH_POINTS)
+def test_fold_crash_recovers(spark, tmp_path, monkeypatch, point):
+    """Crash injection at each step of one batch's commit: after its
+    delta write (before the metrics row), after the metrics row (before
+    the marker), after the marker (before retention), halfway through
+    retention (marker off, data still there), during mention
+    compaction (before its marker) and during the compaction's
+    cleanup. Batch 2 of 3 crashes with retain=1 and compact_keep=1, so
+    retention and compaction both fire on it. The checkpoint replays
+    the batch; the resumed fold must equal a full rebuild over every
+    doc with exactly one metrics row per batch, and leave the same
+    layout a crash-free run does."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    import surfactant_spark.plans.commit as commit
     import surfactant_spark.streaming.incremental as si
 
     src = str(tmp_path / "docs")
     state = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    _docs(spark, 0, 40).coalesce(1).write.mode("append").parquet(src)
+    v2_marker = os.path.join(state, "v2", "_OK")
 
-    real_mark = si._mark_ok
+    def boom():
+        raise RuntimeError(f"injected crash: {point}")
 
-    def dying_mark(dirpath):
-        raise RuntimeError("injected crash before marker")
+    real_write, real_mark, real_drop = commit.write, commit.mark, commit.drop_below
 
-    monkeypatch.setattr(si, "_mark_ok", dying_mark)
-    try:
-        si.stream_kg_fold(spark, src, state, ckpt)
-        raise AssertionError("injected crash did not propagate")
-    except pyspark.errors.exceptions.captured.StreamingQueryException:
-        pass
-    # state data + metrics landed, but the version is NOT committed
-    assert not os.path.exists(os.path.join(state, "v0", "_OK"))
-    assert os.path.isdir(os.path.join(state, "metrics", "d0"))
-    assert si._state_version_dirs(state) == {}  # readers trust nothing yet
+    def write(df, path, marker, partition_by=None):
+        if point == "delta_write" and path == os.path.join(state, "metrics", "d2"):
+            boom()
+        return real_write(df, path, marker, partition_by)
 
-    # recovery: the checkpoint replays batch 0 in full
-    monkeypatch.setattr(si, "_mark_ok", real_mark)
-    st = si.stream_kg_fold(spark, src, state, ckpt)
-    assert os.path.exists(os.path.join(state, "v0", "_OK"))
-    m = si.read_fold_metrics(spark, state).collect()
-    assert len(m) == 1 and m[0].batch_id == 0 and m[0].n_docs == 40
-    want = _edge_set(edges_surface(kg_state_build(_docs(spark, 0, 40))))
+    def mark(marker, info):
+        if (point == "metrics_row" and marker == v2_marker) or (
+            point == "compaction" and marker.endswith(os.path.join("c1", "_OK"))
+        ):
+            boom()
+        real_mark(marker, info)
+        if point == "marker" and marker == v2_marker:
+            boom()
+
+    def drop_below(root, prefix, floor):
+        if point == "retention" and prefix == "v" and floor == 2:
+            os.remove(os.path.join(root, "v1", "_OK"))  # marker off, data stays
+            boom()
+        if point == "compaction_cleanup" and prefix == "d" and floor == 2:
+            boom()
+        real_drop(root, prefix, floor)
+
+    monkeypatch.setattr(commit, "write", write)
+    monkeypatch.setattr(commit, "mark", mark)
+    monkeypatch.setattr(commit, "drop_below", drop_below)
+    for lo, hi in ((0, 20), (20, 40), (40, 60)):
+        _docs(spark, lo, hi).coalesce(1).write.mode("append").parquet(src)
+    kw = dict(max_files_per_trigger=1, retain=1, compact_keep=1)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        si.stream_kg_fold(spark, src, state, ckpt, **kw)
+    if point in ("delta_write", "metrics_row"):
+        # batch 2's data landed, but readers trust nothing of it yet
+        assert not os.path.exists(v2_marker)
+        assert max(commit.dirs(state, "v", committed=True)) == 1
+        got = sorted(r.batch_id for r in si.read_fold_metrics(spark, state).collect())
+        assert got == [0, 1]
+
+    # recovery: the same checkpoint replays batch 2, then folds batch 3
+    monkeypatch.undo()
+    _docs(spark, 60, 80).coalesce(1).write.mode("append").parquet(src)
+    st = si.stream_kg_fold(spark, src, state, ckpt, **kw)
+    rebuilt = kg_state_build(_docs(spark, 0, 80))
+    assert _edge_set(edges_surface(st)) == _edge_set(edges_surface(rebuilt))
+    assert st.mentions.count() == rebuilt.mentions.count()  # none read twice
+    m = sorted((r.batch_id, r.n_docs) for r in si.read_fold_metrics(spark, state).collect())
+    assert m == [(b, 20) for b in range(4)]
+    assert sorted(v for v in os.listdir(state) if v.startswith("v")) == ["v3"]
+    assert sorted(os.listdir(os.path.join(state, "mentions"))) == ["c2", "d3"]
+
+
+def test_torn_fold_marker_is_not_committed(spark, tmp_path):
+    """A truncated version marker and a leftover marker temp file are
+    both "not committed": the version is refolded on replay, never
+    trusted and never a JSON decode error."""
+    from surfactant_spark.plans import commit
+
+    src = str(tmp_path / "docs")
+    state = str(tmp_path / "state")
+    _docs(spark, 0, 30).coalesce(1).write.mode("append").parquet(src)
+    st = stream_kg_fold(spark, src, state, str(tmp_path / "ckpt"))
+    want = _edge_set(edges_surface(st))
+    marker = os.path.join(state, "v0", "_OK")
+    with open(marker, encoding="utf-8") as f:
+        body = f.read()
+    with open(marker, "w", encoding="utf-8") as f:
+        f.write(body[: len(body) // 2])
+    assert commit.dirs(state, "v", committed=True) == {}
+    os.remove(marker)
+    with open(marker + ".tmp", "w", encoding="utf-8") as f:
+        f.write(body)
+    assert commit.dirs(state, "v", committed=True) == {}
+    st = stream_kg_fold(spark, src, state, str(tmp_path / "ckpt2"))
     assert _edge_set(edges_surface(st)) == want
+    assert commit.marker_info(marker) == {"batch_id": 0}
 
 
 # ---------------------------------------------------------------------------

@@ -2383,7 +2383,7 @@ def _py_winnow(text, k=3, w=4, salt="win:v1"):
     for s in range(len(hs) - w + 1):
         window = hs[s : s + w]
         m = min(window)
-        # robust winnowing: RIGHTMOST minimal hash wins ties (1-based)
+        # standard winnowing: RIGHTMOST minimal hash wins ties (1-based)
         pos = s + (w - 1 - window[::-1].index(m)) + 1
         out.add((pos, m))
     return out
