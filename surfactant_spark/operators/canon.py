@@ -4,12 +4,12 @@ reconciliation, root finding, graph merge.
 The reference's merge/canonicalize logic (`surfactant/sbomtypes/
 _sbom.py:173-255`, `cmd/merge.py:131-202`) re-expressed as:
 
-- **connected components**: iterative min-label propagation via
-  DataFrame self-joins with ``localCheckpoint()`` every few rounds to
-  cut lineage (Spark has no recursive CTE; the driver loop is the
-  idiomatic answer — SURVEY.md §4). Large-star/small-star style
-  alternation is unnecessary at our diameter; plain label propagation
-  with doubling via label-of-label joins converges in O(log d) rounds.
+- **connected components**: driver-side union-find for dimension-sized
+  graphs, else min-label propagation via DataFrame self-joins with
+  ``localCheckpoint()`` every few rounds (Spark has no recursive CTE;
+  the driver loop is the idiomatic answer — SURVEY.md §4); doubling via
+  label-of-label joins converges in O(log d) rounds. Alias
+  canonicalization is one such call over the alias–entity graph.
 - **UUID reconciliation**: broadcast map join on subj and obj with
   coalesce (`_sbom.py:203-230`).
 - **roots**: left_anti of nodes against edge children
@@ -114,7 +114,8 @@ def connected_components_auto(
     the alias dictionary): one collect + O(E α(E)) on the driver beats
     ~15 shuffle jobs of tiny data by an order of magnitude in wall
     time, exactly like broadcasting a small join side. Both paths
-    produce identical (id, component=min-id) labels."""
+    produce identical (id, component=min-id) labels; canonicalization
+    (:func:`alias_entity_map`) is one call of this."""
     # take() short-circuits: one job that stops scanning at the
     # threshold, instead of a full count followed by a collect
     rows = edges.select(src, dst).take(small_threshold + 1)
@@ -147,22 +148,21 @@ def connected_components_auto(
 
 def alias_entity_map(alias_dict: DataFrame) -> DataFrame:
     """alias -> canonical entity after unioning entities that share an
-    alias (the canonicalization CC over the alias graph). Returns
-    (alias, entity)."""
-    # edges between entities sharing an alias: self-join on alias
-    a = alias_dict.select("alias", F.col("canon_name").alias("e1"))
-    b = alias_dict.select("alias", F.col("canon_name").alias("e2"))
-    ent_edges = (
-        a.join(b, "alias").where(F.col("e1") < F.col("e2")).select("e1", "e2").dropDuplicates()
+    alias: (alias, entity), one row per alias. One components call over
+    the bipartite graph with an edge per dictionary row from
+    ``"1:" + alias`` to ``"0:" + canon_name`` (rows with a null side
+    carry no mapping). Every entity id sorts before every alias id, so a
+    component's min label is its min entity — the name the oracle's
+    min-wins union-find picks; the alias-side ids, prefixes stripped,
+    are the map."""
+    edges = alias_dict.dropna(subset=["alias", "canon_name"]).select(
+        F.concat(F.lit("1:"), "alias").alias("src"),
+        F.concat(F.lit("0:"), "canon_name").alias("dst"),
     )
-    comp = connected_components_auto(ent_edges, "e1", "e2")
-    return (
-        alias_dict.join(comp, alias_dict["canon_name"] == comp["id"], "left")
-        .select(
-            "alias",
-            F.coalesce("component", "canon_name").alias("entity"),
-        )
-        .dropDuplicates(["alias", "entity"])
+    comp = connected_components_auto(edges)
+    return comp.where(F.col("id").startswith("1:")).select(
+        F.expr("substring(id, 3)").alias("alias"),
+        F.expr("substring(component, 3)").alias("entity"),
     )
 
 

@@ -15,10 +15,9 @@ reference's uuid4.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.hashing import SURFACTANT_SPARK_NS, canon_uuid, entity_uuid
+from ..functions.hashing import SURFACTANT_SPARK_NS
 
 
 def _uuid5_col(name_col: Column) -> Column:
@@ -51,17 +50,6 @@ def canon_uuid_col(sha256_col: Column) -> Column:
 def entity_uuid_col(name_col: Column) -> Column:
     """JVM twin of functions.hashing.entity_uuid."""
     return _uuid5_col(F.concat(F.lit("entity:"), name_col))
-
-
-# Arrow-batched fallbacks (kept for API compatibility / sanity checks)
-@F.pandas_udf(T.StringType())
-def canon_uuid_udf(sha256: pd.Series) -> pd.Series:
-    return sha256.map(canon_uuid)
-
-
-@F.pandas_udf(T.StringType())
-def entity_uuid_udf(name: pd.Series) -> pd.Series:
-    return name.map(entity_uuid)
 
 
 def dedup_nodes(extracted: DataFrame) -> DataFrame:

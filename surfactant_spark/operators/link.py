@@ -159,42 +159,6 @@ def link_extracted(
     )
 
 
-def link_mentions(
-    mentions: DataFrame,
-    url_map: DataFrame,
-    alias_canon: DataFrame,
-    exporters: DataFrame,
-) -> DataFrame:
-    """Legacy shape of :func:`link_extracted` taking a pre-exploded
-    mentions table + url map (kept for API compatibility)."""
-    m = mentions.join(url_map, "url").withColumnRenamed("canon_uuid", "subj_uuid")
-
-    uses = (
-        m.where(F.col("pred") == "Uses")
-        .join(F.broadcast(alias_canon), "alias")
-        .join(F.broadcast(exporters), "entity")
-        .withColumnRenamed("canon_uuid", "obj_uuid")
-    )
-
-    contains = (
-        m.where(F.col("pred") == "Contains")
-        .join(
-            url_map.select(F.col("url").alias("alias"), F.col("canon_uuid").alias("obj_uuid")),
-            "alias",
-        )
-    )
-
-    both = uses.select("subj_uuid", "pred", "obj_uuid", "url").unionByName(
-        contains.select("subj_uuid", "pred", "obj_uuid", "url")
-    )
-    return (
-        both.where(F.col("subj_uuid") != F.col("obj_uuid"))
-        .groupBy("subj_uuid", "pred", "obj_uuid")
-        .agg(F.array_sort(F.collect_set("url")).alias("sources"))
-        .withColumn("n_evidence", F.size("sources").cast("long"))
-    )
-
-
 # --------------------------------------------------------------------------
 # reference-family linkers over SOFTWARE_NODES fixture tables
 # (uuid, fileName array, installPath array, metadata_json)

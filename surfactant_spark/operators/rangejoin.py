@@ -46,30 +46,23 @@ def bucketed_range_join(
     unmatched facts with null dim columns.
 
     All fact columns survive; dim lo/hi survive too (callers often
-    want the matched block's bounds). Null keys/bounds never match."""
+    want the matched block's bounds). Null keys/bounds never match, and
+    neither does an empty interval (hi < lo). Keys and bounds may be
+    negative: bucket ids come from an arithmetic shift, so they keep
+    the keys' order."""
     if bucket_bits < 1 or bucket_bits > 40:
         raise ValueError("bucket_bits must be in [1, 40]")
-    width = 1 << bucket_bits
-    over = dims.where(
-        (F.col(hi_col) - F.col(lo_col)) / F.lit(width) > F.lit(max_fanout)
-    )
-    n_over = over.limit(1).count()
-    if n_over:
+    lo_bkt = F.shiftright(F.col(lo_col).cast("long"), bucket_bits)
+    hi_bkt = F.shiftright(F.col(hi_col).cast("long"), bucket_bits)
+    dims = dims.where(F.col(lo_col) <= F.col(hi_col))
+    if dims.where(hi_bkt - lo_bkt >= F.lit(max_fanout)).limit(1).count():
         raise ValueError(
             f"dim interval spans more than max_fanout={max_fanout} buckets; "
             f"raise bucket_bits or split the interval"
         )
-    exploded = dims.select(
-        "*",
-        F.explode(
-            F.sequence(
-                F.shiftrightunsigned(F.col(lo_col).cast("long"), bucket_bits),
-                F.shiftrightunsigned(F.col(hi_col).cast("long"), bucket_bits),
-            )
-        ).alias("_bkt"),
-    )
+    exploded = dims.select("*", F.explode(F.sequence(lo_bkt, hi_bkt)).alias("_bkt"))
     keyed = facts.withColumn(
-        "_bkt", F.shiftrightunsigned(F.col(key_col).cast("long"), bucket_bits)
+        "_bkt", F.shiftright(F.col(key_col).cast("long"), bucket_bits)
     )
     # no forced broadcast: AQE picks broadcast for small exploded dims
     # and shuffle-hash for planet-scale ones (the canon.py precedent)

@@ -1406,8 +1406,9 @@ def priority_sample(
 ) -> DataFrame:
     """Weighted sample of ``k`` rows without replacement via Priority
     Sampling (Duffield, Lund & Thorup 2007): each row gets priority
-    ``w / u`` for a uniform-ish ``u`` — here the portable md5 hash of
-    the salted id, so the sample is a PURE FUNCTION of (corpus, salt):
+    ``w / u`` for a uniform ``u`` in (0, 1] — here the portable 60-bit
+    md5 hash ``h`` of the salted id as ``u = (h + 1) / 2^60``, so the
+    sample is a PURE FUNCTION of (corpus, salt):
     reproducible across runs, engines, partitionings, and retries,
     exactly like hash_split/stratified_sample but weight-sensitive
     (long documents proportionally likelier). Returns the k rows of
@@ -1432,13 +1433,14 @@ def priority_sample(
                 F.split(F.trim(F.col(text_col)), r"\s+"), lambda t: t != ""
             )
         ).cast("long")
-    h = portable_hash64_col(
-        F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))
-    ) + 1
+    h = portable_hash64_col(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
+    # h has 60 bits and dividing by a power of two is exact, so u is
+    # bit-identical in every engine
+    u = (h + 1).cast("double") / F.lit(float(1 << 60))
     base = docs.select(
         F.col(id_col),
         weight_col.alias("weight"),
-        (weight_col.cast("double") / h.cast("double")).alias("priority"),
+        (weight_col.cast("double") / u).alias("priority"),
     ).where(F.col("weight") > 0)
     top = (
         base.orderBy(F.col("priority").desc(), F.col(id_col).asc())

@@ -1175,7 +1175,7 @@ def sitemap_staleness(
     latest capture per url and classify the recrawl need: 'stale'
     (lastmod after the last capture — refetch), 'fresh' (capture at or
     after lastmod), 'uncaptured' (in the sitemap, never crawled),
-    'unknown' (no lastmod). The scheduling complement of
+    'unknown' (no or malformed lastmod). The scheduling complement of
     crawl_frontier (which finds urls LINKED but uncrawled; this finds
     urls DECLARED but stale/uncrawled).
 
@@ -1189,7 +1189,7 @@ def sitemap_staleness(
         F.col(host_col).alias("host"),
         F.explode(
             F.regexp_extract_all(
-                F.col(xml_col), F.lit(r"<url>.*?</url>"), 0
+                F.col(xml_col), F.lit(r"(?s)<url>.*?</url>"), 0
             )
         ).alias("e"),
     ).select(
@@ -1199,7 +1199,7 @@ def sitemap_staleness(
     ).where(F.col("url") != "")
     lm_days = F.when(
         F.col("lastmod") != "",
-        F.datediff(F.to_date("lastmod"), F.to_date(F.lit("1970-01-01"))),
+        F.datediff(F.try_to_date("lastmod"), F.to_date(F.lit("1970-01-01"))),
     ).cast("long")
     captures = pages.groupBy(F.col(url_col).alias("url")).agg(
         F.max(F.col(ts_col).cast("long")).alias("last_capture_ts")

@@ -122,14 +122,13 @@ class PipelineResult:
     stage_rows: Dict[str, Optional[int]] = field(default_factory=dict)
 
 
-def _lineage_rows(spark: SparkSession, stage: str, df: DataFrame, wall_ms: int, snapshot_id: str, input_rows: int, n_rows: Optional[int] = None):
+def _lineage_rows(spark: SparkSession, stage: str, df: DataFrame, wall_ms: int, snapshot_id: str, input_rows: int, n_rows: int):
     # a stage that ran but produced ZERO rows must still appear in
     # lineage (sentinel partition_id -1, output_rows 0) — groupBy over
     # an empty snapshot yields no rows at all, which silently erased
     # empty stages from the run record. Emptiness comes from the
-    # write-time observed count when available (no job); the limit(1)
-    # probe is the fallback for callers without one.
-    if (n_rows == 0) or (n_rows is None and df.limit(1).count() == 0):
+    # write-time observed count, so it costs no job.
+    if n_rows == 0:
         return spark.createDataFrame(
             [(stage, -1, input_rows, 0, wall_ms, snapshot_id)],
             "stage string, partition_id int, input_rows long, "
@@ -163,10 +162,13 @@ def run_pipeline(
 ) -> PipelineResult:
     """pages + alias_dict -> materialized nodes/edges/lineage.
 
-    Stage graph (each materialized, each independently resumable):
+    Stages, run one after the other in the calling thread, each
+    materialized and independently resumable:
 
+      alias_cc  : alias_dict -> (alias, entity) canonical map — one
+                  connected-components call over the alias-entity
+                  graph, a driver-side union-find at dictionary size
       extract   : pages -> extracted (narrow, Arrow UDF pass)
-      alias_cc  : alias_dict -> (alias, entity) canonical map (CC)
       nodes     : extracted -> content-dedup node table
       edges     : extracted + alias map -> linked, deduped edge table
       near_dup  : (optional) near-duplicate pair table over the
@@ -230,34 +232,10 @@ def run_pipeline(
         run.append(name)
         return out
 
-    # extract and alias_cc have independent inputs: run them as
-    # concurrent Spark jobs (two driver threads) so the small
-    # alias-canonicalization stage hides entirely behind the big
-    # Arrow extraction pass instead of adding fixed latency
-    import threading
-
-    alias_result: Dict[str, object] = {}
-
-    def _alias_job():
-        try:
-            alias_result["df"] = stage("alias_cc", lambda: alias_entity_map(alias_dict))
-        except BaseException as exc:  # surfaced after join
-            alias_result["error"] = exc
-
-    alias_thread = threading.Thread(target=_alias_job, daemon=True)
-    alias_thread.start()
-    try:
-        extracted = stage("extract", lambda: extract_pages(pages))
-    finally:
-        # always reap the alias job — an extract failure must not leave
-        # its Spark job running detached
-        alias_thread.join()
-    if "error" in alias_result:
-        raise alias_result["error"]
-    alias_canon = alias_result.get("df")
-    if alias_canon is None:
-        raise RuntimeError("alias_cc stage produced no result (thread never ran?)")
+    alias_canon = stage("alias_cc", lambda: alias_entity_map(alias_dict))
+    extracted = stage("extract", lambda: extract_pages(pages))
     nodes = stage("nodes", lambda: dedup_nodes(extracted))
+
     def _edges() -> DataFrame:
         exporters = exporters_table(extracted, alias_canon)
         return link_extracted(extracted, alias_canon, exporters, n_salt=n_salt)

@@ -6358,15 +6358,15 @@ en AS (
   SELECT host,
          regexp_extract(u.e, '<loc>([^<]*)</loc>', 1) AS url,
          regexp_extract(u.e, '<lastmod>([^<]*)</lastmod>', 1) AS lastmod
-  FROM sm, UNNEST(regexp_extract_all(sitemap_xml, '<url>.*?</url>')) AS u(e)
+  FROM sm, UNNEST(regexp_extract_all(sitemap_xml, '(?s)<url>.*?</url>')) AS u(e)
   WHERE regexp_extract(u.e, '<loc>([^<]*)</loc>', 1) <> ''),
 cap AS (SELECT url, CAST(MAX(warc_ts) AS BIGINT) AS last_capture_ts
         FROM read_parquet('{pages_path}') GROUP BY url),
 stj AS (
   SELECT en.host, en.url,
          CASE WHEN cap.last_capture_ts IS NULL THEN 'uncaptured'
-              WHEN en.lastmod = '' THEN 'unknown'
-              WHEN CAST(CAST(en.lastmod AS DATE) - DATE '1970-01-01' AS BIGINT)
+              WHEN TRY_CAST(en.lastmod AS DATE) IS NULL THEN 'unknown'
+              WHEN CAST(TRY_CAST(en.lastmod AS DATE) - DATE '1970-01-01' AS BIGINT)
                    > CAST(floor(cap.last_capture_ts / 86400) AS BIGINT)
                    THEN 'stale'
               ELSE 'fresh' END AS status
@@ -6467,7 +6467,7 @@ WITH base AS (
   SELECT doc_id,
          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
                               t -> t <> '')) AS BIGINT) AS weight,
-         ({h} + 1) AS u
+         CAST({h} + 1 AS DOUBLE) / CAST(1152921504606846976 AS DOUBLE) AS u
   FROM documents),
 pri AS (SELECT doc_id, weight,
                CAST(weight AS DOUBLE) / CAST(u AS DOUBLE) AS priority
@@ -6630,9 +6630,12 @@ def q_typo_folding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=True)
     )
-    dic = occ.where(F.col("c") >= TYPO_DICT_MIN).select(
-        F.col("tok").alias("alias")
-    )
+    # the same length cap as fuzzy_string_join's, applied BEFORE the
+    # typos are derived (as the SQL twin does): a longer frequent token
+    # must not yield a mention either
+    dic = occ.where(
+        (F.col("c") >= TYPO_DICT_MIN) & F.length("tok").between(1, 32)
+    ).select(F.col("tok").alias("alias"))
     mid = F.floor(F.length("alias") / 2) + 1
     rare = (
         dic.where(F.length("alias") >= 4)
@@ -6841,14 +6844,14 @@ en AS (
   SELECT host,
          regexp_extract(u.e, '<loc>([^<]*)</loc>', 1) AS url,
          regexp_extract(u.e, '<lastmod>([^<]*)</lastmod>', 1) AS lastmod
-  FROM sm, UNNEST(regexp_extract_all(sitemap_xml, '<url>.*?</url>')) AS u(e)
+  FROM sm, UNNEST(regexp_extract_all(sitemap_xml, '(?s)<url>.*?</url>')) AS u(e)
   WHERE regexp_extract(u.e, '<loc>([^<]*)</loc>', 1) <> ''),
 cap AS (SELECT url, CAST(MAX(warc_ts) AS BIGINT) AS last_capture_ts
         FROM read_parquet('{pages_path}') GROUP BY url),
 j AS (
   SELECT en.host, en.url, en.lastmod,
          CASE WHEN en.lastmod <> ''
-              THEN CAST(CAST(en.lastmod AS DATE) - DATE '1970-01-01' AS BIGINT)
+              THEN CAST(TRY_CAST(en.lastmod AS DATE) - DATE '1970-01-01' AS BIGINT)
          END AS lastmod_days,
          cap.last_capture_ts,
          CAST(floor(cap.last_capture_ts / 86400) AS BIGINT) AS capture_days

@@ -45,9 +45,9 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
-        # independent pipeline stages run as concurrent driver threads
-        # (plans/pipeline.py); FAIR keeps a small dimension job from
-        # queueing behind hundreds of tasks of the big Arrow pass
+        # when callers run independent jobs from concurrent driver
+        # threads, FAIR keeps a small dimension job from queueing
+        # behind hundreds of tasks of a big Arrow pass
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -1,11 +1,8 @@
 """Incremental page ingest via Structured Streaming.
 
 stage-1 extraction is a stateless Arrow map, so it lifts to
-``readStream`` verbatim; dedup state is bounded with a watermark on
-``warc_ts`` (late pages beyond the horizon are treated as new
-sightings — content-hash identity makes that harmless, the node
-collapses at the next batch merge). Connected components stays a
-periodic batch job — there is no streaming CC (SURVEY.md §2.10).
+``readStream`` verbatim. Connected components stays a periodic batch
+job — there is no streaming CC (SURVEY.md §2.10).
 """
 
 from __future__ import annotations
@@ -32,17 +29,6 @@ def stream_pages(spark: SparkSession, path: str, max_files_per_trigger: int = 4)
 def streaming_extract(pages_stream: DataFrame) -> DataFrame:
     """pages stream -> extracted stream (same Arrow pass as batch)."""
     return extract_pages(pages_stream)
-
-
-def streaming_new_content(extracted_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """First sighting of each content hash within the watermark horizon
-    (stateful dropDuplicates — the streaming analogue of the sha256
-    dedup index, `_sbom.py:75-83`)."""
-    return (
-        extracted_stream.withWatermark("warc_ts", watermark)
-        .dropDuplicates(["content_sha256"])
-        .select("url", "warc_ts", "content_sha256", "title", "n_mentions")
-    )
 
 
 def windowed_event_counts(events: DataFrame, window: str = "10 minutes") -> DataFrame:

@@ -3,6 +3,7 @@ merge semantics, root finding — the reference's merge-test contract
 (`/root/reference/tests/cmd/test_merge.py:163-350`, `cmd/merge.py:131-202`)
 in DataFrame form, plus CC property tests on chains/cycles."""
 
+import pytest
 from pyspark.sql import Row
 
 from surfactant_spark.operators.canon import (
@@ -48,6 +49,68 @@ def test_alias_entity_map_unions_shared_alias(spark):
     )
     m = {r.alias: r.entity for r in alias_entity_map(alias).collect()}
     assert m["shared"] == "e1" and m["e1"] == "e1" and m["e3"] == "e3"
+
+
+def _entity_map(df):
+    rows = alias_entity_map(df).collect()
+    m = {r.alias: r.entity for r in rows}
+    assert len(m) == len(rows)  # one row per alias
+    return m
+
+
+@pytest.mark.parametrize("seed", [3, 11])
+def test_alias_entity_map_matches_oracle(spark, seed):
+    from surfactant_spark.oracle import canonical_entity_map
+    from surfactant_spark.synth import alias_dict_to_spark, make_alias_dict
+
+    alias_pdf = make_alias_dict(300, seed=seed)
+    got = _entity_map(alias_dict_to_spark(spark, alias_pdf))
+    assert got == canonical_entity_map(alias_pdf)
+    assert any(a.startswith("shared-") for a in got)
+
+
+def test_alias_entity_map_chain_of_three(spark):
+    """eC -a1- eB -a2- eA: two shared aliases chain three entities into
+    one component, named by its min entity, as the oracle names it."""
+    import pandas as pd
+
+    from surfactant_spark.oracle import canonical_entity_map
+
+    alias_pdf = pd.DataFrame(
+        [("eC", "eC", "k"), ("eB", "eB", "k"), ("eA", "eA", "k"),
+         ("a1", "eC", "k"), ("a1", "eB", "k"), ("a2", "eB", "k"), ("a2", "eA", "k"),
+         ("lone", "eZ", "k")],
+        columns=["alias", "canon_name", "entity_kind"],
+    )
+    got = _entity_map(spark.createDataFrame(alias_pdf))
+    assert got == canonical_entity_map(alias_pdf)
+    assert got == {"eC": "eA", "eB": "eA", "eA": "eA", "a1": "eA", "a2": "eA",
+                   "lone": "eZ"}
+
+
+def test_alias_entity_map_drops_null_rows(spark, spark_pages, corpus, tmp_path):
+    """Dictionary rows with a null alias or canon_name add no map row
+    and change no pipeline edge."""
+    from surfactant_spark.plans.pipeline import run_pipeline
+
+    _, alias_pdf = corpus
+    schema = "alias string, canon_name string, entity_kind string"
+    clean = spark.createDataFrame(alias_pdf, schema)
+    first = alias_pdf.iloc[0]
+    dirty = clean.unionByName(spark.createDataFrame(
+        [(None, first.canon_name, "library"), (first.alias, None, "library"),
+         ("only-null-entity", None, "library"), (None, None, None)],
+        schema,
+    ))
+    assert _entity_map(dirty) == _entity_map(clean)
+
+    def edges(alias, wd):
+        res = run_pipeline(spark, spark_pages, alias, str(tmp_path / wd))
+        return {(r.subj_uuid, r.pred, r.obj_uuid, r.n_evidence)
+                for r in res.edges.collect()}
+
+    want = edges(clean, "clean")
+    assert want and edges(dirty, "dirty") == want
 
 
 def test_rewrite_edge_uuids_then_dedup(spark):

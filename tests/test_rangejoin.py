@@ -60,6 +60,34 @@ def test_fanout_guard_raises_on_missized_buckets(spark):
         bucketed_range_join(_facts(spark, [1]), wide, "key", bucket_bits=0)
 
 
+def test_negative_keys_and_bounds_match_naive(spark):
+    """Intervals with lo < 0 <= hi, wholly negative ones and an empty
+    one (hi < lo) give exactly the naive BETWEEN join's rows."""
+    drows = [
+        (-70_000, 5, "straddle"),  # lo < 0 <= hi, two buckets below zero
+        (-200_000, -100_000, "negative"),
+        (-3, -3, "point"),
+        (50, 10, "empty"),  # hi < lo: matches nothing
+        (131_072, 200_000, "positive"),
+    ]
+    keys = [-250_000, -150_000, -70_001, -70_000, -65_537, -3, 0, 5, 6, 10, 30, 150_000]
+    got = sorted(
+        (r.fid, r.key, r.label)
+        for r in bucketed_range_join(_facts(spark, keys), _dims(spark, drows), "key").collect()
+    )
+    want = []
+    for i, k in enumerate(keys):
+        hits = [lb for lo, hi, lb in drows if lo <= k <= hi]
+        for lb in hits or [None]:
+            want.append((i, k, lb))
+    assert got == sorted(want, key=lambda r: (r[0], r[1], r[2] or ""))
+    assert (3, -70_000, "straddle") in got and (7, 5, "straddle") in got
+    # the guard counts bucket ids, below zero too
+    wide = _dims(spark, [(-(1 << 16) * 5000, 0, "huge")])
+    with pytest.raises(ValueError, match="max_fanout"):
+        bucketed_range_join(_facts(spark, [1]), wide, "key", max_fanout=4096)
+
+
 def test_plan_is_equi_join_not_nested_loop(spark):
     dims = _dims(spark, [(0, 99_999, "a"), (100_000, 400_000, "b")])
     df = bucketed_range_join(_facts(spark, [5, 150_000]), dims, "key")

@@ -2044,6 +2044,38 @@ def test_fuzzy_join_hand_cases(spark):
         fuzzy_string_join(left, right, "m", "a", max_dist=3)
 
 
+def test_typo_folding_long_frequent_token_matches_sql_twin(spark, tmp_path):
+    """A frequent 33-char token is over the fuzzy join's 32-char cap: it
+    must yield no typo'd mention in either engine, even when its typo
+    (its middle character deleted) is itself a frequent 32-char word."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from surfactant_spark.queries import _sql_typo_folding, q_typo_folding
+
+    long33 = "a" * 16 + "x" + "b" * 16
+    long32 = "a" * 16 + "b" * 16  # long33's typo
+    text = f"hello world {long33} {long32} kitten"
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(6), pa.int64()), "text": [text] * 6,
+    }), path)
+
+    got = q_typo_folding(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    try:
+        con.execute(f"create view documents as select * from read_parquet('{path}')")
+        want = con.execute(_sql_typo_folding()).fetchdf()
+    finally:
+        con.close()
+    def rows(pdf):
+        return {tuple(r) for r in pdf[sorted(pdf.columns)].itertuples(index=False)}
+
+    assert rows(got) == rows(want)
+    assert long32 not in set(got["mention"])
+
+
 def test_fuzzy_join_k2_reaches_distance_two(spark):
     from surfactant_spark.operators.similarity import fuzzy_string_join
 
@@ -2239,10 +2271,11 @@ def _py_priority_sample(rows, k, salt="psample:v1"):
         w = len([t for t in text.strip().split() if t])
         if w <= 0:
             continue
-        u = int(hashlib.md5(f"{salt}:{doc_id}".encode()).hexdigest()[:15], 16) + 1
-        # float(u) first: engines divide the ROUNDED double, while
+        h = int(hashlib.md5(f"{salt}:{doc_id}".encode()).hexdigest()[:15], 16)
+        # float(h + 1) first: engines divide the ROUNDED double, while
         # python int/int would round the exact rational — last-ulp gap
-        pri.append((doc_id, w, float(w) / float(u)))
+        u = float(h + 1) / float(1 << 60)
+        pri.append((doc_id, w, float(w) / u))
     pri.sort(key=lambda r: (-r[2], r[0]))
     tau = pri[k][2] if len(pri) >= k + 1 else 0.0
     return {d: (w, p, max(float(w), tau)) for d, w, p in pri[:k]}
@@ -2265,6 +2298,28 @@ def test_priority_sample_matches_python_and_is_weight_sensitive(spark):
     assert mean_s > mean_all
     with pytest.raises(ValueError, match="k must"):
         priority_sample(docs, k=0)
+
+
+def test_priority_sample_est_weight_is_unbiased(spark):
+    """With k < n, tau > 0 lifts some est_weight above its weight, and
+    the sum of est_weight over the sample estimates the population
+    weight sum without bias. Tolerance: over these 16 fixed salts the
+    mean must land within 8% of the population sum; its standard error
+    here is about 2.4%, while the sum of the sampled raw weights falls
+    about 15% short."""
+    from surfactant_spark.operators.textops import priority_sample
+
+    rows = [(i, "tok " * (1 + (i * 7) % 40)) for i in range(60)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    population = sum(1 + (i * 7) % 40 for i in range(60))
+    sums, lifted = [], 0
+    for j in range(16):
+        got = priority_sample(docs, k=40, salt=f"unbiased:{j}").collect()
+        sums.append(sum(r.est_weight for r in got))
+        lifted += sum(r.est_weight > r.weight for r in got)
+    assert lifted > 0
+    mean = sum(sums) / len(sums)
+    assert abs(mean - population) <= 0.08 * population, (mean, population)
 
 
 def test_priority_sample_small_corpus_tau_zero(spark):

@@ -1011,6 +1011,55 @@ def test_sitemap_staleness_classification(spark):
     assert got2["https://h.org/a"].status == "stale"
 
 
+def test_sitemap_staleness_multiline_matches_sql_twin(spark, tmp_path):
+    """A pretty-printed sitemap (<loc>/<lastmod> on their own lines) and
+    a malformed lastmod: both engines find every entry and agree row
+    for row; the malformed date reads as no lastmod."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from surfactant_spark.operators.webgraph import sitemap_staleness
+    from surfactant_spark.queries import _sql_sitemap_stale
+
+    day = 86400
+    xml = (
+        "<urlset>\n"
+        "  <url>\n    <loc>https://h.org/a</loc>\n"
+        "    <lastmod>2024-03-15</lastmod>\n  </url>\n"
+        "  <url>\n    <loc>https://h.org/b</loc>\n"
+        "    <lastmod>not-a-date</lastmod>\n  </url>\n"
+        "  <url>\n    <loc>https://h.org/c</loc>\n  </url>\n"
+        "</urlset>\n"
+    )
+    pages_path, sm_path = str(tmp_path / "pages.parquet"), str(tmp_path / "sm.parquet")
+    pq.write_table(pa.table({
+        "url": ["https://h.org/a", "https://h.org/b"],
+        "warc_ts": pa.array([19700 * day, 19800 * day], pa.int64()),
+    }), pages_path)
+    pq.write_table(pa.table({"host": ["h.org"], "sitemap_xml": [xml]}), sm_path)
+
+    got = sitemap_staleness(spark.read.parquet(pages_path), spark.read.parquet(sm_path))
+    collected = got.collect()
+    by_url = {r.url: r for r in collected}
+    assert set(by_url) == {"https://h.org/a", "https://h.org/b", "https://h.org/c"}
+    assert by_url["https://h.org/a"].status == "stale"  # lastmod day 19797 > 19700
+    assert by_url["https://h.org/b"].lastmod_days is None
+    assert by_url["https://h.org/b"].status == "unknown"
+    assert by_url["https://h.org/c"].status == "uncaptured"
+
+    con = duckdb.connect()
+    try:
+        want = con.execute(_sql_sitemap_stale(pages_path, sm_path)).fetchdf()
+    finally:
+        con.close()
+    want_rows = {
+        tuple(None if v is None or v != v else v for v in row)
+        for row in want[got.columns].astype(object).itertuples(index=False)
+    }
+    assert {tuple(r) for r in collected} == want_rows
+
+
 def test_trustrank_seeds_hold_trust_mass(spark):
     from surfactant_spark.queries import q_host_trustrank
     from tests.conftest import SF_DIR
