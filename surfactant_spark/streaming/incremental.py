@@ -7,11 +7,14 @@ job — there is no streaming CC (SURVEY.md §2.10).
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.extract import extract_pages
 from ..plans import commit
@@ -156,8 +159,10 @@ def _fold_stream(stream: DataFrame, state_dir: str, checkpoint: str, step,
 
         metrics = step(batch_df, batch_id, max(done) if done else None, write)
         row = {"batch_id": batch_id, **metrics, "wall_ms": int((time.time() - t0) * 1000)}
-        write(f"metrics/d{batch_id}", s.createDataFrame(
-            [tuple(row.values())], ", ".join(f"{c} long" for c in row)))
+        # one row built in the JVM: a local Python list would start
+        # Python workers for the write
+        write(f"metrics/d{batch_id}", s.range(1, numPartitions=1).select(
+            *[F.lit(v).cast("long").alias(c) for c, v in row.items()]))
         commit.mark(marker, {"batch_id": batch_id})
         housekeeping(s, batch_id)
 
@@ -203,9 +208,16 @@ def _read_state(spark: SparkSession, state_dir: str, version: int):
 
     vdir = os.path.join(state_dir, f"v{version}")
     return KgState(
-        mentions=spark.read.parquet(*_mention_paths(state_dir, version)),
-        **{t: spark.read.parquet(os.path.join(vdir, t)) for t in _COMPACT_TABLES},
+        mentions=_read_table(spark, "mentions", *_mention_paths(state_dir, version)),
+        **{t: _read_table(spark, t, os.path.join(vdir, t)) for t in _COMPACT_TABLES},
     )
+
+
+def _read_table(spark: SparkSession, table: str, *paths: str) -> DataFrame:
+    """A KgState table read with the schema its writer wrote."""
+    from ..operators.incremental import STATE_SCHEMAS
+
+    return spark.read.schema(STATE_SCHEMAS[table]).parquet(*paths)
 
 
 def _compact_mentions(spark: SparkSession, state_dir: str, batch_id: int, keep: int) -> None:
@@ -228,7 +240,8 @@ def _compact_mentions(spark: SparkSession, state_dir: str, batch_id: int, keep: 
     upto = batch_id - keep
     cdir = os.path.join(mdir, f"c{upto}")
     marker = os.path.join(cdir, commit.MARKER)
-    commit.write(spark.read.parquet(*_mention_paths(state_dir, upto)), cdir, marker)
+    commit.write(_read_table(spark, "mentions", *_mention_paths(state_dir, upto)),
+                 cdir, marker)
     commit.mark(marker, {"upto": upto})
     commit.drop_below(mdir, "c", upto)
     commit.drop_below(mdir, "d", upto + 1)
@@ -271,19 +284,31 @@ def stream_kg_fold(
     retention never breaks resume; deltas are exempt). ``compact_keep``
     bounds the delta fan-in: past that many deltas, the older ones are
     rewritten into one committed ``mentions/c{upto}`` dir and dropped,
-    so a read unions at most ``compact_keep + 1`` dirs (0 disables)."""
+    so a read unions at most ``compact_keep + 1`` dirs (0 disables).
+
+    Per batch the fixed cost is Spark jobs, so the step spends none it
+    can avoid: state is read with the schemas its writers wrote
+    (``STATE_SCHEMAS``, no inference job), the batch's row count is
+    observed during the fold's first materialization (no count job),
+    ``kg_state_fold`` evaluates each delta-sized intermediate once, and
+    the metrics row is built in the JVM. A 150-doc batch on 4 local
+    cores, compaction included, runs 16 jobs."""
     from ..operators.incremental import kg_state_build, kg_state_fold
 
     def step(batch_df, b, prev, write):
+        # the batch is read once: its row count is observed during the
+        # fold's first (eager) materialization
+        obs = Observation()
+        docs = batch_df.observe(obs, F.count(F.lit(1)).alias("n_docs"))
         if prev is None:
-            st = kg_state_build(batch_df)
+            st = kg_state_build(docs)
         else:
-            st = kg_state_fold(_read_state(batch_df.sparkSession, state_dir, prev), batch_df)
+            st = kg_state_fold(_read_state(batch_df.sparkSession, state_dir, prev), docs)
         for t in ("canon", "exporters"):
             write(f"v{b}/{t}", getattr(st, t))
         n_edges = write(f"v{b}/edges", st.edges)
         write(f"mentions/d{b}", st.mentions_delta)
-        return {"n_docs": batch_df.count(), "n_edges": n_edges}
+        return {"n_docs": int(obs.get["n_docs"]), "n_edges": n_edges}
 
     def compact(s, b):
         if compact_keep and compact_keep > 0:
@@ -304,9 +329,23 @@ def read_fold_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
     A row past the committed frontier belongs to a batch that has not
     committed yet (it will be rewritten on replay) and is left out."""
     done = commit.dirs(state_dir, "v", committed=True)
-    return spark.read.parquet(os.path.join(state_dir, "metrics", "d*")).where(
+    reader = spark.read
+    # every row of one store has the columns of its fold step, all
+    # long: read them off one row file's parquet footer with pyarrow,
+    # not by an inferring Spark job
+    part = next(iter(glob.glob(os.path.join(state_dir, "metrics", "d*", "*.parquet"))), None)
+    if part is not None:
+        reader = reader.schema(from_arrow_schema(pq.read_schema(part)))
+    return reader.parquet(os.path.join(state_dir, "metrics", "d*")).where(
         F.col("batch_id") <= max(done, default=-1)
     )
+
+
+# the whole-state tables of the two single-table folds, as written
+_WORDS_SCHEMA = "word_idx long, word_bits long"
+_RECENCY_SCHEMA = (
+    "src_host string, ent string, n_sightings long, first_seen long, last_seen long"
+)
 
 
 def stream_url_seen(
@@ -365,7 +404,7 @@ def stream_url_seen(
         words = bloom_build(urls, m_words=mw, k=kk)
         n_seen = 0
         if prev is not None:
-            old = batch_df.sparkSession.read.parquet(
+            old = batch_df.sparkSession.read.schema(_WORDS_SCHEMA).parquet(
                 os.path.join(state_dir, f"v{prev}", "words"))
             n_seen = (bloom_probe(old, urls, m_words=mw, k=kk)
                       .where(F.col("bloom_hit") == 1).count())
@@ -375,7 +414,7 @@ def stream_url_seen(
 
     stream = stream_pages(spark, pages_path, max_files_per_trigger)
     v = _fold_stream(stream, state_dir, checkpoint, step, retain)
-    return None if v is None else spark.read.parquet(
+    return None if v is None else spark.read.schema(_WORDS_SCHEMA).parquet(
         os.path.join(state_dir, f"v{v}", "words"))
 
 
@@ -426,7 +465,7 @@ def stream_edge_recency(
         n_batch = cur.count()
         merged, n_prev = cur, 0
         if prev is not None:
-            old = batch_df.sparkSession.read.parquet(
+            old = batch_df.sparkSession.read.schema(_RECENCY_SCHEMA).parquet(
                 os.path.join(state_dir, f"v{prev}", "edges"))
             merged = (
                 old.unionByName(cur)
@@ -444,7 +483,7 @@ def stream_edge_recency(
 
     stream = stream_pages(spark, pages_path, max_files_per_trigger)
     v = _fold_stream(stream, state_dir, checkpoint, step, retain)
-    return None if v is None else spark.read.parquet(
+    return None if v is None else spark.read.schema(_RECENCY_SCHEMA).parquet(
         os.path.join(state_dir, f"v{v}", "edges"))
 
 
