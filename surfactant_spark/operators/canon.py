@@ -24,6 +24,7 @@ from __future__ import annotations
 from collections import deque
 from typing import Dict, List, Optional, Set
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -115,7 +116,11 @@ def connected_components_auto(
     ~15 shuffle jobs of tiny data by an order of magnitude in wall
     time, exactly like broadcasting a small join side. Both paths
     produce identical (id, component=min-id) labels; canonicalization
-    (:func:`alias_entity_map`) is one call of this."""
+    (:func:`alias_entity_map`) is one call of this.
+
+    The driver path hands its labels back as a pandas frame converted
+    through Arrow into the JVM: a DataFrame built from a list of tuples
+    would start Python workers in every job that reads it."""
     # take() short-circuits: one job that stops scanning at the
     # threshold, instead of a full count followed by a collect
     rows = edges.select(src, dst).take(small_threshold + 1)
@@ -139,11 +144,9 @@ def connected_components_auto(
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    labels = [(x, find(x)) for x in list(parent)]
-    spark = edges.sparkSession
-    if not labels:
-        return spark.createDataFrame([], "id string, component string")
-    return spark.createDataFrame(labels, "id string, component string")
+    labels = pd.DataFrame({"id": list(parent)})
+    labels["component"] = labels["id"].map(find)
+    return edges.sparkSession.createDataFrame(labels, "id string, component string")
 
 
 def alias_entity_map(alias_dict: DataFrame) -> DataFrame:

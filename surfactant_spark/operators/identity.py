@@ -61,7 +61,10 @@ def dedup_nodes(extracted: DataFrame) -> DataFrame:
       keeps all fileName/installPath sightings, `_software.py:121-153`);
     - first_seen: min warc_ts (first-sighting-wins,
       `_software.py:112-113`);
-    - n_sources: distinct urls.
+    - n_sources: distinct urls, read off ``aliases`` as its size —
+      ``collect_set`` and ``countDistinct`` both skip nulls, so they
+      agree, and a ``countDistinct`` would add a second aggregation
+      level with its own exchange (one more Spark job).
     """
     return (
         extracted.groupBy("content_sha256")
@@ -71,7 +74,6 @@ def dedup_nodes(extracted: DataFrame) -> DataFrame:
             ),
             F.array_sort(F.collect_set("url")).alias("aliases"),
             F.min("warc_ts").alias("first_seen"),
-            F.countDistinct("url").alias("n_sources"),
         )
         .select(
             canon_uuid_col(F.col("content_sha256")).alias("canon_uuid"),
@@ -79,7 +81,7 @@ def dedup_nodes(extracted: DataFrame) -> DataFrame:
             "names",
             "aliases",
             "first_seen",
-            "n_sources",
+            F.size("aliases").cast("long").alias("n_sources"),
         )
     )
 

@@ -98,16 +98,30 @@ def link_extracted(
 ) -> DataFrame:
     """extracted -> edges (subj_uuid, pred, obj_uuid, n_evidence, sources).
 
-    Uses-mentions resolve alias -> canonical entity -> every exporter
-    node of that entity via two dictionary joins (J4 pattern). The
-    joins are left to AQE: it broadcasts when the runtime size is
+    One probe of the dictionary side per predicate (J4 pattern):
+
+    - Uses-mentions resolve alias -> canonical entity -> every exporter
+      node of that entity. Both hops are inner, null-intolerant equi
+      joins, so they reorder freely (*Complete Join Reordering for
+      Null-Intolerant Joins*): ``alias_canon ⋈ exporters`` is joined
+      first, on the dictionary side, into one ``alias -> obj_uuid`` map
+      (one row per alias and exporter node, since ``alias_canon`` has
+      one row per alias and ``exporters`` is deduplicated), and the
+      mentions probe it once instead of twice.
+    - Contains-mentions (bundle links) resolve the mentioned url through
+      the url -> uuid map. It stays a probe of its own: merged with the
+      Uses map into one ``(pred, alias)`` dimension it would save one
+      job here, but that dimension would be corpus-sized (every url),
+      where the Uses map stays dictionary-sized and broadcastable at web
+      scale.
+
+    The joins are left to AQE: it broadcasts when the runtime size is
     genuinely small and falls back to shuffle otherwise — a *forced*
     broadcast of a half-million-row export table measurably loses to
-    the shuffle join (serialized driver-side hash build). At true web
-    scale use :func:`salted_join` if the entity keys are hot. The subject UUID is derived
-    inline from the row's own content hash — no join against a url map
-    for the Uses path. Contains-mentions (bundle links) resolve the
-    mentioned url through the url->uuid map; that side is small.
+    the shuffle join (serialized driver-side hash build). With
+    ``n_salt > 0`` the Uses probe is a :func:`salted_join` (hot alias
+    keys). The subject UUID is derived inline from the row's own
+    content hash — no join against a url map for the Uses path.
     Self-edges dropped (`java_relationship.py:47`); (subj,pred,obj)
     dedup-aggregated (`_sbom.py:33` set semantics) with evidence kept.
     """
@@ -124,23 +138,17 @@ def link_extracted(
         F.col("m.alias").alias("alias"),
     )
 
+    uses_map = alias_canon.join(exporters, "entity").select(
+        "alias", F.col("canon_uuid").alias("obj_uuid")
+    )
     mu = m.where(F.col("pred") == "Uses")
     if n_salt > 0:
-        # hot-domain skew: a handful of entities carry most mentions;
-        # replicate the dictionary sides n_salt ways and spread the big
-        # side deterministically (north-rule salted dictionary join)
-        uses = salted_join(
-            salted_join(mu, alias_canon, "alias", n_salt=n_salt),
-            exporters,
-            "entity",
-            n_salt=n_salt,
-        ).withColumnRenamed("canon_uuid", "obj_uuid")
+        # hot-domain skew: a handful of aliases carry most mentions;
+        # replicate the map n_salt ways and spread the big side
+        # deterministically (north-rule salted dictionary join)
+        uses = salted_join(mu, uses_map, "alias", n_salt=n_salt)
     else:
-        uses = (
-            mu.join(alias_canon, "alias")
-            .join(exporters, "entity")
-            .withColumnRenamed("canon_uuid", "obj_uuid")
-        )
+        uses = mu.join(uses_map, "alias")
 
     url_map = extracted.select(
         F.col("url").alias("alias"),

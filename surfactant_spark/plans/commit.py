@@ -18,6 +18,9 @@ unparseable marker as "not committed", and a leftover temp file is
 never read. Removal runs the protocol backwards (:func:`drop_below`):
 marker first, data second, so an interrupted removal leaves an
 unmarked directory that readers ignore, never a marked partial one.
+
+A committed directory's row counts need no Spark job either:
+:func:`footer_rows` sums them from the parquet footers on the driver.
 """
 
 from __future__ import annotations
@@ -26,12 +29,16 @@ import json
 import os
 import re
 import shutil
-from typing import Dict, List, Optional
+from typing import Dict, Iterable, List, Optional
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, functions as F
 
 # marker file name inside a versioned directory
 MARKER = "_OK"
+# the write task's id in a Spark output file name (part-00003-<uuid>...)
+_PART = re.compile(r"part-(\d+)")
 
 
 def _unmark(marker: str) -> None:
@@ -63,6 +70,23 @@ def write(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return int(obs.get["rows"])
+
+
+def footer_rows(files: Iterable[str]) -> Dict[int, int]:
+    """Rows per write task of a written parquet directory, from the
+    footers of its ``files`` (e.g. ``inputFiles()`` of the read-back),
+    read on the driver: no Spark job. The key is the task id in the
+    file name ``part-NNNNN``; a partitioned write leaves one file per
+    task and partition value, summed under the task's key. Tasks that
+    wrote no rows are left out."""
+    out: Dict[int, int] = {}
+    for f in files:
+        path = unquote(urlparse(f).path) if f.startswith("file:") else f
+        n = pq.read_metadata(path).num_rows
+        if n:
+            task = int(_PART.match(os.path.basename(path)).group(1))
+            out[task] = out.get(task, 0) + n
+    return out
 
 
 def mark(marker: str, info: dict) -> None:

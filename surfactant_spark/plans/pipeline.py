@@ -16,7 +16,12 @@ resume re-runs it instead of serving a partial snapshot.
 Per-stage lineage rows (stage, partition_id, input_rows, output_rows,
 wall_ms, snapshot_id) are appended to ``<workdir>/lineage`` — the
 analogue of the reference stamping collection provenance on every entry
-(`surfactant/sbomtypes/_software.py:77-84`).
+(`surfactant/sbomtypes/_software.py:77-84`). They cost no Spark job:
+the counts are read from the footers of each stage's parquet files on
+the driver (:func:`.commit.footer_rows`), so ``partition_id`` is the id
+of the WRITE task (the ``part-NNNNN`` of its files), and the run's rows
+are appended as one parquet file written on the driver (details in
+:func:`run_pipeline`).
 """
 
 from __future__ import annotations
@@ -24,10 +29,14 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Dict, List, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..operators.canon import alias_entity_map
 from ..operators.extract import extract_pages
@@ -122,31 +131,54 @@ class PipelineResult:
     stage_rows: Dict[str, Optional[int]] = field(default_factory=dict)
 
 
-def _lineage_rows(spark: SparkSession, stage: str, df: DataFrame, wall_ms: int, snapshot_id: str, input_rows: int, n_rows: int):
-    # a stage that ran but produced ZERO rows must still appear in
-    # lineage (sentinel partition_id -1, output_rows 0) — groupBy over
-    # an empty snapshot yields no rows at all, which silently erased
-    # empty stages from the run record. Emptiness comes from the
-    # write-time observed count, so it costs no job.
+_LINEAGE_ARROW = pa.schema([
+    ("stage", pa.string()), ("partition_id", pa.int32()), ("input_rows", pa.int64()),
+    ("output_rows", pa.int64()), ("wall_ms", pa.int64()), ("snapshot_id", pa.string()),
+])
+# the lineage table's columns and types, as every writer of it wrote them
+LINEAGE_SCHEMA = from_arrow_schema(_LINEAGE_ARROW)
+
+
+def _lineage_records(stage: str, df: DataFrame, wall_ms: int, snapshot_id: str,
+                     input_rows: int, n_rows: int) -> List[tuple]:
+    """One stage's lineage rows, one per write task, from the footers of
+    the snapshot ``df`` was read back from. A stage that ran but wrote
+    ZERO rows (no files) still appears: one sentinel row, partition_id
+    -1, output_rows 0 — emptiness comes from the write-time observed
+    count."""
     if n_rows == 0:
-        return spark.createDataFrame(
-            [(stage, -1, input_rows, 0, wall_ms, snapshot_id)],
-            "stage string, partition_id int, input_rows long, "
-            "output_rows long, wall_ms long, snapshot_id string",
-        )
-    per_part = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("output_rows"))
-        .select(
-            F.lit(stage).alias("stage"),
-            "partition_id",
-            F.lit(input_rows).cast("long").alias("input_rows"),
-            F.col("output_rows").cast("long"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.lit(snapshot_id).alias("snapshot_id"),
-        )
+        return [(stage, -1, input_rows, 0, wall_ms, snapshot_id)]
+    return [
+        (stage, task, input_rows, rows, wall_ms, snapshot_id)
+        for task, rows in sorted(commit.footer_rows(df.inputFiles()).items())
+    ]
+
+
+def _lineage_table(records: List[tuple]) -> pa.Table:
+    return pa.Table.from_pylist(
+        [dict(zip(_LINEAGE_ARROW.names, r)) for r in records], schema=_LINEAGE_ARROW
     )
-    return per_part
+
+
+def _append_lineage(path: str, records: List[tuple]) -> None:
+    """Append a run's lineage rows as one parquet file written on the
+    driver (no Spark job). The file is written under a hidden temp name,
+    which readers skip, and renamed into place, so a crash mid-append
+    adds no rows, never part of a file."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(_lineage_table(records), tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
+def _lineage_rows(spark: SparkSession, stage: str, df: DataFrame, wall_ms: int, snapshot_id: str, input_rows: int, n_rows: int):
+    """One stage's lineage rows (see :func:`_lineage_records`) as a
+    DataFrame built through Arrow in the JVM: writing it starts no
+    Python worker."""
+    return spark.createDataFrame(
+        _lineage_table(_lineage_records(stage, df, wall_ms, snapshot_id, input_rows, n_rows))
+    )
 
 
 def run_pipeline(
@@ -192,9 +224,20 @@ def run_pipeline(
                   reads pages, not extracted, and shares the run's
                   snapshot/lineage/resume machinery
 
-    ``n_salt > 0`` runs the dictionary joins of the edges stage through
+    ``n_salt > 0`` runs the dictionary join of the edges stage through
     the deterministic salted join (hot-domain skew; result-identical —
     tests/test_e2e.py pins it).
+
+    Every stage that ran appends its lineage rows to
+    ``<workdir>/lineage``: one row per write task (``partition_id`` is
+    the ``part-NNNNN`` task id, ``output_rows`` the rows in that task's
+    files — summed over the ``pred=`` directories of ``edges`` — read
+    from the parquet footers and summing to ``stage_rows[stage]``), or
+    the one sentinel row (``partition_id`` -1, ``output_rows`` 0) of a
+    stage that wrote none. ``input_rows`` is the page count (-1 for
+    ``alias_cc``). The append is one parquet file written on the
+    driver, and ``lineage`` reads the whole directory back with
+    :data:`LINEAGE_SCHEMA`: the lineage costs the run no Spark job.
     """
     near_dup_sig = None
     if near_dup:
@@ -211,9 +254,10 @@ def run_pipeline(
     resumed: List[str] = []
     # lineage construction is deferred: input_rows for every corpus stage
     # is the extract stage's OWN output count (extract is 1:1 with pages),
-    # observed DURING the snapshot write — the pipeline pays neither the
-    # old separate full `pages.count()` scan (round-3 verdict item 3) nor
-    # any count job over the snapshot.
+    # observed DURING the snapshot write, and output_rows come from the
+    # snapshot's parquet footers — the pipeline pays neither a separate
+    # full `pages.count()` scan (round-3 verdict item 3) nor any count
+    # job over a snapshot.
     pending: List[tuple] = []
     stage_rows: Dict[str, Optional[int]] = {}
 
@@ -299,7 +343,7 @@ def run_pipeline(
 
         host_df = stage("hostgraph", lambda: _host_graph_op(pages))
 
-    lineage_batches: List[DataFrame] = []
+    lineage_path = os.path.join(workdir, "lineage")
     if pending:
         # extract is 1:1 with pages: its write-time observed count IS
         # n_pages. When extract itself was resumed its marker carries
@@ -309,24 +353,16 @@ def run_pipeline(
         n_pages = stage_rows["extract"]
         if n_pages is None:
             n_pages = extracted.count()
-        per_stage_input = {
-            "extract": n_pages, "nodes": n_pages, "edges": n_pages,
-            "near_dup": n_pages, "audit": n_pages, "clusters": n_pages,
-            "hostgraph": n_pages,
-        }
-        for name, out, wall_ms, snapshot_id, n_rows in pending:
-            lineage_batches.append(
-                _lineage_rows(
-                    spark, name, out, wall_ms, snapshot_id,
-                    per_stage_input.get(name, -1), n_rows=n_rows,
-                )
+        records = [
+            rec
+            for name, out, wall_ms, snapshot_id, n_rows in pending
+            for rec in _lineage_records(
+                name, out, wall_ms, snapshot_id,
+                -1 if name == "alias_cc" else n_pages, n_rows,
             )
-    if lineage_batches:
-        lineage = lineage_batches[0]
-        for b in lineage_batches[1:]:
-            lineage = lineage.unionByName(b)
-        lineage.write.mode("append").parquet(os.path.join(workdir, "lineage"))
-    lineage_df = spark.read.parquet(os.path.join(workdir, "lineage"))
+        ]
+        _append_lineage(lineage_path, records)
+    lineage_df = spark.read.schema(LINEAGE_SCHEMA).parquet(lineage_path)
 
     return PipelineResult(
         nodes=nodes, edges=edges, lineage=lineage_df,

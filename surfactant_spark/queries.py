@@ -1618,7 +1618,7 @@ FROM allf
 
 # ---------------------------------------------------------------------------
 # A7 — lineage metrics with an engine-portable partition key. The
-# pipeline's physical lineage uses spark_partition_id (not
+# pipeline's physical lineage keys on the write task (not
 # SQL-replayable); this query pins the same metrics math (rows,
 # distinct langs, payload bytes, id range per partition) over an
 # explicit md5-derived bucket both engines compute identically.

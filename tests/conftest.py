@@ -63,3 +63,9 @@ def spark_alias(spark, corpus):
 
     _, alias_pdf = corpus
     return alias_dict_to_spark(spark, alias_pdf).cache()
+
+
+def jobs_so_far(spark) -> int:
+    """DAGScheduler.nextJobId: the id the next submitted Spark job will
+    get; the difference of two readings counts the jobs in between."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())

@@ -3,10 +3,14 @@ pandas oracle (P/R == 1.0 at this scale; contract is >= 0.95,
 BASELINE.md), plus snapshot resume and lineage (the reference's
 restart-from-scratch gap, SURVEY §4)."""
 
+import glob
 import os
+
+import pytest
 
 from surfactant_spark.oracle import precision_recall, run_oracle
 from surfactant_spark.plans.pipeline import run_pipeline
+from tests.conftest import jobs_so_far
 
 
 def test_pipeline_matches_oracle(spark, spark_pages, spark_alias, corpus, tmp_path):
@@ -139,25 +143,44 @@ def test_pipeline_resume_skips_completed_stages(spark, spark_pages, spark_alias,
     assert third.edges.count() == n_edges
 
 
-def test_pipeline_crash_mid_rewrite_reruns_stage(
-    spark, spark_pages, spark_alias, corpus, tmp_path, monkeypatch
-):
-    """A resume=False rerun that dies while rewriting ``edges`` (a
-    raising UDF fails the write task) must leave ``edges`` uncommitted:
-    the next resume re-runs it and its triples equal the oracle. The old
-    marker stood over the half-rewritten directory, and the resume
-    served 0 edges while stage_rows still claimed the old count. A torn
-    ``_edges_OK`` and a leftover marker temp file are "not committed"
-    too, never a JSON decode error."""
-    import pytest
+def _raising_filter(df, col):
+    """``df`` whose every row fails inside a Python UDF. The filter is
+    nondeterministic, so it stays in the write's final stage, after the
+    overwrite has cleared the old snapshot."""
     from pyspark.sql import functions as F
 
+    def boom(_):
+        raise RuntimeError("injected write failure")
+
+    return df.where(F.udf(boom, "boolean").asNondeterministic()(col))
+
+
+# stage -> (the pipeline name that builds its frame, a column of it)
+_STAGE_FRAMES = {
+    "alias_cc": ("alias_entity_map", "alias"),
+    "extract": ("extract_pages", "url"),
+    "nodes": ("dedup_nodes", "sha256"),
+    "edges": ("link_extracted", "pred"),
+}
+
+
+@pytest.mark.parametrize("stage", list(_STAGE_FRAMES))
+def test_pipeline_crash_mid_rewrite_reruns_stage(
+    spark, spark_pages, spark_alias, corpus, tmp_path, monkeypatch, stage
+):
+    """A resume=False rerun that dies while rewriting one stage (a
+    raising UDF fails the write task) must leave that stage uncommitted:
+    the next resume re-runs it, serves the other stages from their
+    snapshots, and its triples equal the oracle. (The old marker once
+    stood over the half-rewritten directory, and the resume served 0
+    edges while stage_rows still claimed the old count.) A torn marker
+    and a leftover marker temp file are "not committed" too, never a
+    JSON decode error."""
     import surfactant_spark.plans.pipeline as pipeline
 
     pages_pdf, alias_pdf = corpus
     _, _, want = run_oracle(pages_pdf, alias_pdf)
     wd = str(tmp_path / "wd_crash")
-    marker = os.path.join(wd, "_edges_OK")
 
     def triples(res):
         return {(r.subj_uuid, r.pred, r.obj_uuid) for r in res.edges.collect()}
@@ -165,39 +188,161 @@ def test_pipeline_crash_mid_rewrite_reruns_stage(
     full = run_pipeline(spark, spark_pages, spark_alias, wd)
     assert triples(full) == want
 
-    real_link = pipeline.link_extracted
-
-    def dying_link(*args, **kwargs):
-        def boom(pred):
-            raise RuntimeError("injected edges write failure")
-
-        # nondeterministic: the filter stays in the write's final stage,
-        # after the overwrite has cleared the old snapshot
-        udf = F.udf(boom, "boolean").asNondeterministic()
-        return real_link(*args, **kwargs).where(udf("pred"))
-
-    monkeypatch.setattr(pipeline, "link_extracted", dying_link)
-    with pytest.raises(Exception, match="injected edges write failure"):
+    target, col = _STAGE_FRAMES[stage]
+    real = getattr(pipeline, target)
+    monkeypatch.setattr(
+        pipeline, target, lambda *a, **kw: _raising_filter(real(*a, **kw), col)
+    )
+    with pytest.raises(Exception, match="injected write failure"):
         run_pipeline(spark, spark_pages, spark_alias, wd, resume=False)
     monkeypatch.undo()
 
     res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
     assert triples(res) == want
-    assert "edges" in res.stages_run and "edges" not in res.stages_resumed
-    assert res.stage_rows["edges"] == len(res.edges.collect())
+    assert res.stages_run == [stage]
+    assert res.stages_resumed == [s for s in _STAGE_FRAMES if s != stage]
+    assert res.stage_rows[stage] == pipeline.SnapshotStore(spark, wd).read(stage).count()
 
+    marker = os.path.join(wd, f"_{stage}_OK")
     with open(marker, encoding="utf-8") as f:
         body = f.read()
     with open(marker, "w", encoding="utf-8") as f:
         f.write(body[: len(body) // 2])  # torn marker
     res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
-    assert res.stages_run == ["edges"] and triples(res) == want
+    assert res.stages_run == [stage] and triples(res) == want
 
     os.remove(marker)
     with open(marker + ".tmp", "w", encoding="utf-8") as f:
         f.write(body)  # died between the temp write and the rename
     res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
-    assert res.stages_run == ["edges"] and triples(res) == want
+    assert res.stages_run == [stage] and triples(res) == want
+
+
+def test_pipeline_crash_in_lineage_append_adds_no_rows(
+    spark, spark_pages, spark_alias, corpus, tmp_path, monkeypatch
+):
+    """A resume=False rerun that dies in its lineage append, after every
+    stage has committed (the parquet file is written under its hidden
+    temp name, the rename never happens), adds no lineage rows: readers
+    skip the temp file. The next resume serves every stage from its
+    snapshot with the oracle's triples, and the lineage reads back the
+    first run's rows."""
+    import pyarrow.parquet as pq
+
+    pages_pdf, alias_pdf = corpus
+    _, _, want = run_oracle(pages_pdf, alias_pdf)
+    wd = str(tmp_path / "wd_lin_crash")
+    full = run_pipeline(spark, spark_pages, spark_alias, wd)
+    before = sorted(map(tuple, full.lineage.collect()))
+
+    real_write = pq.write_table
+
+    def dying_write(table, where, **kw):
+        real_write(table, where, **kw)
+        raise RuntimeError("injected lineage append failure")
+
+    monkeypatch.setattr(pq, "write_table", dying_write)
+    with pytest.raises(RuntimeError, match="injected lineage append failure"):
+        run_pipeline(spark, spark_pages, spark_alias, wd, resume=False)
+    monkeypatch.undo()
+    assert any(n.startswith(".part-") for n in os.listdir(os.path.join(wd, "lineage")))
+
+    res = run_pipeline(spark, spark_pages, spark_alias, wd, resume=True)
+    assert res.stages_run == []
+    assert res.stages_resumed == ["alias_cc", "extract", "nodes", "edges"]
+    assert {(r.subj_uuid, r.pred, r.obj_uuid) for r in res.edges.collect()} == want
+    assert sorted(map(tuple, res.lineage.collect())) == before
+
+
+def test_pipeline_op_job_count(spark, spark_pages, spark_alias, tmp_path):
+    """One fresh run_pipeline over the tier-1 corpus, after a warm run,
+    costs a bounded number of Spark jobs: lineage from the parquet
+    footers, appended from the driver and read back without inference,
+    one link probe per predicate, one node aggregation.
+    Measured here: 13 jobs; 21 with a groupBy lineage per stage appended
+    by Spark, an inferred lineage read, a second link probe of the Uses
+    mentions and a countDistinct node aggregation."""
+    run_pipeline(spark, spark_pages, spark_alias, str(tmp_path / "warm"), resume=False)
+    j0 = jobs_so_far(spark)
+    run_pipeline(spark, spark_pages, spark_alias, str(tmp_path / "op"), resume=False)
+    jobs = jobs_so_far(spark) - j0
+    assert jobs <= 15, f"one pipeline op ran {jobs} Spark jobs"
+
+
+@pytest.mark.parametrize("near_dup", [None, "minhash"])
+def test_pipeline_lineage_contract(spark, spark_pages, spark_alias, tmp_path, near_dup):
+    """Lineage rows are one per write task of every stage that ran, and
+    they sum to the stage's write-time count (``edges``, written
+    partitioned by ``pred``, included); a stage that wrote nothing keeps
+    one sentinel row; a fully resumed run reads the lineage back without
+    a Spark job; rows appended by the earlier lineage writer (a groupBy
+    over ``spark_partition_id`` per stage) read back under the declared
+    schema."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from surfactant_spark.plans.pipeline import LINEAGE_SCHEMA
+
+    wd = str(tmp_path / "wd_lin")
+    lin_dir = os.path.join(wd, "lineage")
+    os.makedirs(wd)
+    # what the earlier writer appended for one run: per-read-partition
+    # counts of a re-read snapshot, and a zero-row sentinel built from a
+    # Python list
+    legacy = (
+        spark_pages.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(F.count(F.lit(1)).alias("output_rows"))
+        .select(
+            F.lit("legacy").alias("stage"), "partition_id",
+            F.lit(7).cast("long").alias("input_rows"), F.col("output_rows").cast("long"),
+            F.lit(5).cast("long").alias("wall_ms"), F.lit("legacy-1").alias("snapshot_id"),
+        )
+        .unionByName(spark.createDataFrame(
+            [("legacy_empty", -1, 7, 0, 5, "legacy-2")], LINEAGE_SCHEMA))
+    )
+    legacy.write.mode("append").parquet(lin_dir)
+    n_pages = spark_pages.count()
+
+    res = run_pipeline(spark, spark_pages, spark_alias, wd, near_dup=near_dup)
+    want = ["alias_cc", "extract", "nodes", "edges"]
+    if near_dup:
+        want += ["near_dup", "audit", "clusters"]
+    assert res.stages_run == want
+    lin = res.lineage.toPandas()
+    # both writers' files hold the declared columns and types
+    declared = [(f.name, f.dataType) for f in LINEAGE_SCHEMA]
+    files = glob.glob(os.path.join(lin_dir, "part-*"))
+    assert len(files) >= 2
+    for path in files:
+        assert [(f.name, f.dataType) for f in from_arrow_schema(pq.read_schema(path))] == declared
+    legacy_rows = lin[lin.stage.str.startswith("legacy")]
+    assert legacy_rows.output_rows.sum() == n_pages and len(legacy_rows) > 1
+    assert legacy_rows[legacy_rows.stage == "legacy_empty"].partition_id.tolist() == [-1]
+    assert set(lin.stage) == set(want) | {"legacy", "legacy_empty"}
+    empty = 0
+    for st in want:
+        rows = lin[lin.stage == st]
+        assert rows.output_rows.sum() == res.stage_rows[st], st
+        assert rows.partition_id.is_unique and rows.snapshot_id.nunique() == 1, st
+        assert set(rows.input_rows) == {-1 if st == "alias_cc" else n_pages}, st
+        if res.stage_rows[st] == 0:
+            empty += 1
+            assert rows[["partition_id", "output_rows"]].values.tolist() == [[-1, 0]], st
+        else:
+            assert (rows.partition_id >= 0).all() and (rows.output_rows > 0).all(), st
+    # a write task leaves one edges file per pred= directory, and its
+    # files sum under its one row
+    edge_files = glob.glob(os.path.join(wd, "edges", "pred=*", "part-*.parquet"))
+    assert len(edge_files) > len(lin[lin.stage == "edges"])
+    if near_dup:
+        assert empty >= 1  # the audit stage drops no bucket at the default cap
+
+    j0 = jobs_so_far(spark)
+    again = run_pipeline(spark, spark_pages, spark_alias, wd, near_dup=near_dup)
+    assert jobs_so_far(spark) - j0 == 0
+    assert again.stages_run == [] and set(again.stages_resumed) == set(want)
+    assert len(again.lineage.toPandas()) == len(lin)
 
 
 def test_duplicate_pages_share_canonical_node(spark, spark_pages, corpus):

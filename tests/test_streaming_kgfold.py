@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from surfactant_spark.operators.incremental import edges_surface, kg_state_build
 from surfactant_spark.streaming.incremental import stream_kg_fold
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_so_far
 
 
 def _docs(spark, lo, hi):
@@ -208,11 +208,6 @@ def test_compaction_read_ignores_covered_leftovers(spark, tmp_path):
     assert _edge_set(edges_surface(st2)) == clean  # d0 ignored, no double-count
 
 
-def _jobs_so_far(spark):
-    # DAGScheduler.nextJobId: the id the next submitted job will get
-    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
-
-
 def _schema_of(df):
     return [(f.name, f.dataType.simpleString()) for f in df.schema]
 
@@ -267,9 +262,9 @@ def test_fold_batch_job_count(spark, tmp_path):
         _docs(spark, lo, hi).coalesce(1).write.mode("append").parquet(src)
     stream_kg_fold(spark, src, state, ckpt, **kw)
     _docs(spark, 60, 90).coalesce(1).write.mode("append").parquet(src)
-    j0 = _jobs_so_far(spark)
+    j0 = jobs_so_far(spark)
     st = stream_kg_fold(spark, src, state, ckpt, **kw)
-    jobs = _jobs_so_far(spark) - j0
+    jobs = jobs_so_far(spark) - j0
     assert os.path.isdir(os.path.join(state, "mentions", "c0"))  # compacted
     assert jobs <= 24, f"one fold batch ran {jobs} Spark jobs"
     want = _edge_set(edges_surface(kg_state_build(_docs(spark, 0, 90))))
@@ -459,7 +454,12 @@ def test_stream_url_seen_folds_and_counts_repeats(spark, tmp_path):
     b_new = _pages(spark, 60, 90)
     b = b_new.unionByName(_pages(spark, 0, 20))
     b.coalesce(1).write.mode("append").parquet(src)
+    j0 = jobs_so_far(spark)
     words = stream_url_seen(spark, src, state, ckpt)
+    # the distinct-url count is observed during the batch's checkpoint:
+    # 10 jobs here, 12 with a count job over the checkpoint
+    jobs = jobs_so_far(spark) - j0
+    assert jobs <= 11, f"one url-seen batch ran {jobs} Spark jobs"
     allp = _pages(spark, 0, 90)
     assert _words_set(words) == _words_set(
         bloom_build(allp.select("url").dropDuplicates())
@@ -545,7 +545,13 @@ def test_stream_edge_recency_fold_equals_rebuild(spark, tmp_path):
 
     # second batch folds in; state must equal the one-shot rebuild
     _web_pages_df(spark, 70, 120).coalesce(1).write.mode("append").parquet(src)
+    j0 = jobs_so_far(spark)
     st = stream_edge_recency(spark, src, state, ckpt)
+    # the batch's edge count is observed during its checkpoint and the
+    # standing state's is summed from parquet footers: 8 jobs here, 12
+    # with a count job over each
+    jobs = jobs_so_far(spark) - j0
+    assert jobs <= 10, f"one edge-recency batch ran {jobs} Spark jobs"
     want = edge_recency(_web_pages_df(spark, 0, 120), horizon_s=60)
     assert rows(edge_recency_from_state(st, 60)) == rows(want)
 
